@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+cores this process may run on) and prints ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query materializes via the noop sink (full compute, no driver
@@ -88,102 +89,6 @@ def _host_provenance() -> dict:
     return prov
 
 
-def _last_recorded_batch_legs(names, sf) -> dict[str, float] | None:
-    """Per-query legs (restricted to ``names``) from the most recent
-    BENCH_r*.json beside this script at the SAME scale factor, if any
-    — cross-SF comparison would be meaningless, and drift must
-    compare like-for-like legs (a brand-new leg has no prior)."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[int, dict] | None = None
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if not m:
-            continue
-        try:
-            with open(p) as fh:
-                rec = json.load(fh)
-            parsed = rec.get("parsed") or {}
-            if str(parsed.get("sf")) != str(sf):
-                continue
-            qs = parsed.get("queries") or {}
-            legs = {n: float(qs[n]) for n in names if n in qs}
-        except (OSError, ValueError, TypeError, AttributeError):
-            continue
-        n = int(m.group(1))
-        if legs and (best is None or n > best[0]):
-            best = (n, legs)
-    return None if best is None else best[1]
-
-
-def _recorded_rounds(sf) -> list[dict]:
-    """Parsed BENCH records at the same scale factor (meters +
-    per-leg timings), for the ratio-based drift gates."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    out = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        try:
-            with open(p) as fh:
-                parsed = (json.load(fh)).get("parsed") or {}
-            if str(parsed.get("sf")) != str(sf):
-                continue
-            out.append(
-                {
-                    "ingest": float(parsed["ingest_points_per_sec"]),
-                    "streaming": float(
-                        parsed["streaming_points_per_sec"]
-                    ),
-                    "queries": {
-                        k: float(v)
-                        for k, v in (parsed.get("queries") or {}).items()
-                    },
-                }
-            )
-        except (OSError, ValueError, TypeError, KeyError):
-            continue
-    return [r for r in out if r["queries"]]
-
-
-def _common_subtotal(a: dict, b: dict) -> float:
-    """Sum of per-leg seconds over the legs BOTH rounds ran — rounds
-    add legs over time, so a raw total comparison would skew the
-    sibling normalization against older records."""
-    common = set(a) & set(b)
-    return sum(a[k] for k in common) if common else 0.0
-
-
-def _meter_drifted(
-    value: float, recorded: list[tuple[float, float, float]]
-) -> bool:
-    """Leg-RATIO drift gate (r8 advice): documented host/VM variance
-    shifts every leg ~25% together, so an absolute 15% threshold
-    trips on every slow-host round, re-measures on the same depressed
-    host, and records a depressed number anyway. Instead a meter
-    re-measures when it moves relative to its SIBLING leg: each
-    recorded round contributes ``(rec_value, rec_norm, cur_norm)``
-    where the norms are computed over the SAME basis (the common-leg
-    subtotal for the batch meter — rounds add legs over time, so a
-    raw total would skew against older records — or the sibling
-    meter's inverse for streaming); whole-host shifts cancel in
-    ``value * cur_norm`` vs ``rec_value * rec_norm``. The absolute
-    fallback only fires past 40% — beyond any recorded host variance
-    — so a genuine engine collapse still re-measures even when every
-    leg collapsed proportionally."""
-    if not recorded:
-        return False
-    best_abs = max(v for v, _, _ in recorded)
-    ratio_drift = any(
-        value * cn < 0.85 * v * rn
-        for v, rn, cn in recorded
-        if rn > 0 and cn > 0
-    )
-    return ratio_drift or value < 0.60 * best_abs
-
-
 def _max_job_id(sc) -> int:
     """Highest Spark job id submitted so far (-1 before the first).
 
@@ -244,28 +149,6 @@ def main() -> None:
     # shows multi-second noise spikes, so two steady samples beat one
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "4"))
     timings, leg_jobs = _time_batch_queries(spark, sf_dir, qs, repeats)
-
-    # drift policy (codifies SCALING.md's leg-ratio argument): when
-    # this run's batch subtotal is >15% slower than the last recorded
-    # round's on the SAME legs, re-run the batch loop once and keep
-    # the faster per-leg numbers — one extra ~15 s pass, instead of
-    # recording a host-noise spike as a regression
-    drift_rerun = False
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    last_legs = _last_recorded_batch_legs(list(timings), sf_val)
-    if last_legs:
-        cur = sum(timings[n] for n in last_legs)  # like-for-like legs
-        if cur > 1.15 * sum(last_legs.values()):
-            drift_rerun = True
-            second, second_jobs = _time_batch_queries(
-                spark, sf_dir, qs, repeats
-            )
-            timings = {
-                n: min(timings[n], second[n]) for n in timings
-            }
-            # structural counts are load-independent; both passes
-            # agree unless a plan is nondeterministic — keep the rerun
-            leg_jobs = second_jobs
 
     # storage path: write the four-table contract once, then time the
     # read queries a graphite-web-shaped client would issue
@@ -343,53 +226,9 @@ def main() -> None:
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     pps = round(2 * n_events / timings["points_ingest"])
 
-    # meter drift discipline (r7: the drift gate covered only the
-    # batch loop, so a loaded host recorded streaming 56k against a
-    # 92k steady state; r8 advice: absolute thresholds trip on every
-    # ~25% whole-host shift): a meter re-measures once when it drifts
-    # relative to its SIBLING leg (see _meter_drifted) and keeps the
-    # better number — host noise cancels in the ratio, so only a
-    # single-leg regression or an outright collapse re-measures.
-    meter_rerun = {"ingest": False, "streaming": False}
-    rounds = _recorded_rounds(sf_val)
-    if _meter_drifted(
-        pps,
-        [
-            (
-                r["ingest"],
-                _common_subtotal(r["queries"], timings),
-                _common_subtotal(timings, r["queries"]),
-            )
-            for r in rounds
-        ],
-    ):
-        meter_rerun["ingest"] = True
-        fn = qs["points_ingest"]
-        best = timings["points_ingest"]
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings["points_ingest"] = round(best, 3)
-        pps = round(2 * n_events / timings["points_ingest"])
-
     # sustained STREAMING ingest: land line files, run the
     # foreachBatch four-table pipeline until drained
     stream_pps = _stream_throughput(spark, sf_dir)
-    if _meter_drifted(
-        stream_pps,
-        [
-            # a recorded round with a zero/negative ingest meter
-            # (corrupt or failed run) must not ZeroDivisionError the
-            # whole bench — _meter_drifted itself only uses rn/cn > 0
-            # tuples, so skipping them here changes nothing else
-            (r["streaming"], 1.0 / r["ingest"], 1.0 / pps)
-            for r in rounds
-            if r.get("ingest") and r["ingest"] > 0 and pps > 0
-        ],
-    ):
-        meter_rerun["streaming"] = True
-        stream_pps = max(stream_pps, _stream_throughput(spark, sf_dir))
 
     total = round(sum(timings.values()), 3)
     print(
@@ -408,8 +247,6 @@ def main() -> None:
                 "streaming_points_per_sec": stream_pps,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "host": _host_provenance(),
-                "drift_rerun": drift_rerun,
-                "meter_rerun": meter_rerun,
             }
         )
     )

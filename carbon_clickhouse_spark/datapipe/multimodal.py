@@ -458,11 +458,6 @@ class _JpegBitReader:
         self.marker: int | None = None
 
     def _fill(self) -> bool:
-        # SYNC WARNING (ADVICE r12 #4): this fill loop is hand-inlined
-        # in the hot scan loops (_decode_lossless_scan, _jpeg_scan_mean
-        # DC huff/read/AC-skip) — any semantic change here MUST be
-        # mirrored there; the test_inlined_* equivalence suites are the
-        # mandatory gate for edits to reader/writer/QM internals.
         if self.marker is not None or self.pos >= len(self.buf):
             return False
         b = self.buf[self.pos]
@@ -913,158 +908,29 @@ def _jpeg_scan_mean(
     preds = {c[0]: 0 for c in comps}
     dc_sum = 0  # luma DC (quantized) running sum
     dc_blocks = 0
-    # r12 (round-2 tail): this loop pays one huff per DC plus one huff
-    # (+ skip-read) per AC run — the dominant bit-reader consumer for
-    # baseline/extended-sequential frames — so the reader's registers
-    # live in locals across the scan and the LUT fast path of huff() /
-    # read() / _fill() is inlined, the same idiom as
-    # _decode_lossless_scan. Every slow path (non-LUT table, invalid
-    # prefix, marker-truncated register, restart sync) syncs the
-    # locals back into the reader, delegates to the ONE reference
-    # implementation, and reloads — decisions identical by
-    # construction (pinned by the baseline/DRI suites and the corpus
-    # md5 check in tools/profile_multimodal.py).
-    buflen = len(buf)
-    bits = 0
-    nbits = 0
-    rpos = reader.pos
-    rmarker: int | None = None
     for m in range(mcus):
         if restart_interval and m and m % restart_interval == 0:
-            reader.bits, reader.nbits = bits, nbits
-            reader.pos, reader.marker = rpos, rmarker
-            mk = reader.sync_marker()
-            if mk is None or not 0xD0 <= mk <= 0xD7:
+            marker = reader.sync_marker()
+            if marker is None or not 0xD0 <= marker <= 0xD7:
                 return None
-            bits, nbits = reader.bits, reader.nbits
-            rpos, rmarker = reader.pos, reader.marker
             preds = {c[0]: 0 for c in comps}
         for comp, dc_tab, ac_tab, nblocks in order:
             for _ in range(nblocks):
-                # --- reader.huff(dc_tab) inlined: flat-LUT fast path ---
-                s = None
-                try:
-                    lut = dc_tab._lut
-                except AttributeError:  # plain dict (hand-built in tests)
-                    lut = None
-                if lut is not None:
-                    maxlen = dc_tab._maxlen
-                    while nbits < maxlen:
-                        # --- reader._fill() inlined ---
-                        if rmarker is not None or rpos >= buflen:
-                            break
-                        b = buf[rpos]
-                        if b == 0xFF:
-                            if rpos + 1 >= buflen:
-                                break
-                            nxt = buf[rpos + 1]
-                            if nxt == 0x00:
-                                rpos += 2  # stuffed zero: data byte 0xFF
-                            else:
-                                rmarker = nxt
-                                break
-                        else:
-                            rpos += 1
-                        bits = (bits << 8) | b
-                        nbits += 8
-                    if nbits >= maxlen:
-                        entry = lut[
-                            (bits >> (nbits - maxlen)) & ((1 << maxlen) - 1)
-                        ]
-                        if entry is not None:
-                            length, s = entry
-                            nbits -= length
-                            bits &= (1 << nbits) - 1
-                if s is None:
-                    # slow path: sync, delegate, reload
-                    reader.bits, reader.nbits = bits, nbits
-                    reader.pos, reader.marker = rpos, rmarker
-                    s = reader.huff(dc_tab)
-                    if s is None or s > 15:
-                        return None
-                    bits, nbits = reader.bits, reader.nbits
-                    rpos, rmarker = reader.pos, reader.marker
-                elif s > 15:
+                s = reader.huff(dc_tab)
+                if s is None or s > 15:
                     return None
-                if s:
-                    # --- reader.read(s) + _jpeg_extend inlined ---
-                    ok = True
-                    while nbits < s:
-                        if rmarker is not None or rpos >= buflen:
-                            ok = False
-                            break
-                        b = buf[rpos]
-                        if b == 0xFF:
-                            if rpos + 1 >= buflen:
-                                ok = False
-                                break
-                            nxt = buf[rpos + 1]
-                            if nxt == 0x00:
-                                rpos += 2
-                            else:
-                                rmarker = nxt
-                                ok = False
-                                break
-                        else:
-                            rpos += 1
-                        bits = (bits << 8) | b
-                        nbits += 8
-                    if not ok:
-                        return None
-                    nbits -= s
-                    mag = (bits >> nbits) & ((1 << s) - 1)
-                    bits &= (1 << nbits) - 1
-                    preds[comp[0]] += (
-                        mag if mag >= (1 << (s - 1)) else mag - (1 << s) + 1
-                    )
-                # s == 0: zero diff, predictor unchanged
+                mag = reader.read(s) if s else 0
+                if mag is None:
+                    return None
+                preds[comp[0]] += _jpeg_extend(mag, s)
                 if comp[0] == luma_id:
                     dc_sum += preds[comp[0]]
                     dc_blocks += 1
                 k = 1
                 while k < 64:  # AC: decode to advance, values unused
-                    # --- reader.huff(ac_tab) inlined (same fast path) ---
-                    rs = None
-                    try:
-                        lut = ac_tab._lut
-                    except AttributeError:
-                        lut = None
-                    if lut is not None:
-                        maxlen = ac_tab._maxlen
-                        while nbits < maxlen:
-                            if rmarker is not None or rpos >= buflen:
-                                break
-                            b = buf[rpos]
-                            if b == 0xFF:
-                                if rpos + 1 >= buflen:
-                                    break
-                                nxt = buf[rpos + 1]
-                                if nxt == 0x00:
-                                    rpos += 2
-                                else:
-                                    rmarker = nxt
-                                    break
-                            else:
-                                rpos += 1
-                            bits = (bits << 8) | b
-                            nbits += 8
-                        if nbits >= maxlen:
-                            entry = lut[
-                                (bits >> (nbits - maxlen))
-                                & ((1 << maxlen) - 1)
-                            ]
-                            if entry is not None:
-                                length, rs = entry
-                                nbits -= length
-                                bits &= (1 << nbits) - 1
+                    rs = reader.huff(ac_tab)
                     if rs is None:
-                        reader.bits, reader.nbits = bits, nbits
-                        reader.pos, reader.marker = rpos, rmarker
-                        rs = reader.huff(ac_tab)
-                        if rs is None:
-                            return None
-                        bits, nbits = reader.bits, reader.nbits
-                        rpos, rmarker = reader.pos, reader.marker
+                        return None
                     r, size = rs >> 4, rs & 15
                     if size == 0:
                         if r == 15:
@@ -1072,32 +938,8 @@ def _jpeg_scan_mean(
                             continue
                         break  # EOB
                     k += r + 1
-                    # --- reader.read(size) inlined: skip, value unused ---
-                    ok = True
-                    while nbits < size:
-                        if rmarker is not None or rpos >= buflen:
-                            ok = False
-                            break
-                        b = buf[rpos]
-                        if b == 0xFF:
-                            if rpos + 1 >= buflen:
-                                ok = False
-                                break
-                            nxt = buf[rpos + 1]
-                            if nxt == 0x00:
-                                rpos += 2
-                            else:
-                                rmarker = nxt
-                                ok = False
-                                break
-                        else:
-                            rpos += 1
-                        bits = (bits << 8) | b
-                        nbits += 8
-                    if not ok:
+                    if reader.read(size) is None:
                         return None
-                    nbits -= size
-                    bits &= (1 << nbits) - 1
     if not dc_blocks:
         return None
     q0 = qt[comps[0][3]][0]
@@ -1455,9 +1297,6 @@ class _JpegBitWriter:
         self.n = 0
 
     def put(self, code: int, length: int) -> None:
-        # SYNC WARNING (ADVICE r12 #4): inlined copies live in
-        # encode_jpeg_lossless and encode_jpeg_gray_blocks — mirror any
-        # change there; test_inlined_* suites gate edits.
         # r12 optimization: trim the accumulator to its pending bits
         # after draining — the old form never truncated `acc`, so over
         # a scan it grew into an arbitrary-precision integer and every
@@ -1506,57 +1345,23 @@ def encode_jpeg_gray_blocks(
     if restart_interval:
         out += seg(0xDD, struct.pack(">H", restart_interval))
     out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    # r12 (round-2 tail): the three w.put() calls per block are
-    # inlined with the accumulator in locals (the encode_jpeg_lossless
-    # idiom) and drained once per block — byte-identical, because the
-    # emitted bytes are a pure function of the cumulative bit string
-    # and a block adds at most 13 bits (3-bit DC code + <=8-bit
-    # magnitude + 2-bit EOB), so the register stays a machine int.
-    # pad()/restart flushes sync the locals back into the ONE
-    # reference writer. Pinned by the baseline/hierarchical/AVI
-    # round-trip suites and the corpus md5 check.
-    eob_code, eob_len = ac_enc[0x00]
     w = _JpegBitWriter()
-    sout = w.out
-    acc = 0
-    nb = 0
     pred = 0
     for i, v in enumerate(values):
         if restart_interval and i and i % restart_interval == 0:
-            w.acc, w.n = acc, nb
             w.pad()
             out += w.out
             out += bytes([0xFF, 0xD0 + (i // restart_interval - 1) % 8])
             w = _JpegBitWriter()
-            sout = w.out
-            acc = 0
-            nb = 0
             pred = 0
         dcq = int(v) - 128
         diff = dcq - pred
         pred = dcq
         s = abs(diff).bit_length()
-        # --- w.put(*dc_enc[s]) inlined ---
-        code, length = dc_enc[s]
-        acc = (acc << length) | (code & ((1 << length) - 1))
-        nb += length
+        w.put(*dc_enc[s])
         if s:
-            # --- w.put(diff-or-complement, s) inlined ---
-            acc = (acc << s) | (
-                (diff if diff >= 0 else diff - 1) & ((1 << s) - 1)
-            )
-            nb += s
-        # --- w.put(*ac_enc[0x00]) inlined (EOB: no AC terms) ---
-        acc = (acc << eob_len) | (eob_code & ((1 << eob_len) - 1))
-        nb += eob_len
-        while nb >= 8:
-            nb -= 8
-            b = (acc >> nb) & 0xFF
-            sout.append(b)
-            if b == 0xFF:
-                sout.append(0x00)  # byte stuffing
-        acc &= (1 << nb) - 1
-    w.acc, w.n = acc, nb
+            w.put(diff if diff >= 0 else diff - 1, s)
+        w.put(*ac_enc[0x00])  # EOB: no AC terms
     w.pad()
     out += w.out
     out += b"\xff\xd9"
@@ -1823,164 +1628,39 @@ class _QmEncoder:
     def encode_diff(self, bins: bytearray, st: int, xbase: int,
                     diff: int) -> int:
         """One signed-difference encode — the zero decision, sign,
-        magnitude category chain and mantissa bits (Figures
-        F.4/F.6/F.7; also the H.2 per-sample unit) — in a single
-        call (r12): the encoder mirror of
-        :meth:`_QmDecoder.decode_diff`.
-
-        SYNC WARNING (ADVICE r12 #4): encode_jpeg_arith_lossless
-        holds a line-for-line inlined replica of this unit — mirror
-        any change there (test_inlined_lossless_scan_loops_* is the
-        gate).
-
-        Fully register-local (r12 batch 4, same reasoning as the
-        decoder): the chain/mantissa bits are near-random, so the
-        first fused form's MPS-no-renorm fast path missed most of
-        the time and ~80% of decisions still paid a delegate
-        :meth:`encode` call. The WHOLE decision — both arms,
-        conditional exchange, state transition, renormalization and
-        BYTEOUT with carry — is inlined ONCE at the top of the same
-        phase loop (zero → sign → magnitude>1 → chain → terminator →
-        mantissa), with A/C/CT in Python locals across the unit
-        (``raw`` is shared by reference). The decision block is a
-        line-for-line replica of :meth:`encode`'s arms (which stays
-        the reference implementation for the scan-loop callers);
-        byte-exactness is pinned by
-        ``test_fused_qm_diff_units_match_per_call_form`` (streams,
-        statistics bins and encoder register state vs the per-call
-        form) and the md5 corpus checks.
+        magnitude category chain at ``xbase`` and mantissa bits at the
+        chain stop + 14 (Figures F.4/F.6/F.7; also the H.2 per-sample
+        unit): the encoder dual of :meth:`_QmDecoder.decode_diff`.
 
         Returns the chain MSB ``m`` (0 when ``|diff| == 1``) for the
         F.1.4.4.1.2 conditioning classification, or -1 when
         ``diff == 0``."""
-        table = _QM_TABLE
-        fixed = _QM_FIXED
-        a = self.a
-        c = self.c
-        ct = self.ct
-        raw = self.raw
-        # phases mirror decode_diff: 0 zero-decision @st, 1 sign
-        # @st+1, 2 magnitude>1 @st+2+sign, 3 category chain @xbase..,
-        # 4 terminator, 5 mantissa (fixed pos). Unlike the decoder,
-        # each next decision's value d is KNOWN from diff — the
-        # transition computes (pos, d) for the next round.
-        sign = 0
-        sz = 0
-        v2 = 0
+        if diff == 0:
+            self.encode(bins, st, 0)
+            return -1
+        self.encode(bins, st, 1)
+        sign = 1 if diff < 0 else 0
+        self.encode(bins, st + 1, sign)
+        sz = (-diff if sign else diff) - 1
+        pos = st + 2 + sign
         m = 0
-        mm = 0
-        phase = 0
-        pos = st
-        d = 1 if diff else 0
-        result = -1
-        while True:
-            # --- encode decision d at bins[pos] (encode() inlined) ---
-            stt = bins[pos]
-            idx = stt >> 1
-            mps = stt & 1
-            qe, nmps, nlps, switch = table[idx]
-            an = a - qe
-            if d == mps and an & 0x8000:
-                a = an  # MPS, no renormalization: nothing else moves
-            else:
-                if d == mps:
-                    if an < qe:  # conditional exchange: MPS takes top
-                        c += an
-                        an = qe
-                    if idx != fixed:
-                        bins[pos] = (nmps << 1) | mps
-                else:
-                    if an >= qe:  # LPS takes the top
-                        c += an
-                        an = qe
-                    # else conditional exchange: LPS keeps the bottom
-                    if idx != fixed:
-                        if switch:
-                            mps ^= 1
-                        bins[pos] = (nlps << 1) | mps
-                # renorm + BYTEOUT w/ carry (encode()/_byteout inlined)
-                while True:
-                    an <<= 1
-                    c <<= 1
-                    ct -= 1
-                    if ct == 0:
-                        t = c >> 19
-                        if t > 0xFF:
-                            j = len(raw) - 1
-                            while j >= 0 and raw[j] == 0xFF:
-                                raw[j] = 0x00
-                                j -= 1
-                            if j < 0:  # code value >= 1.0: impossible
-                                raise ValueError(
-                                    "arithmetic carry out of stream"
-                                )
-                            raw[j] += 1
-                            t &= 0xFF
-                        raw.append(t)
-                        c &= 0x7FFFF
-                        ct = 8
-                    if an & 0x8000:
-                        break
-                a = an
-            # --- phase transition: the NEXT (pos, d) ---
-            if phase == 3:  # category chain (the densest run)
+        if sz:
+            self.encode(bins, pos, 1)
+            m = 1
+            v2 = sz
+            pos = xbase
+            while v2 >> 1:
+                self.encode(bins, pos, 1)
                 m <<= 1
                 v2 >>= 1
                 pos += 1
-                if v2 >> 1:
-                    continue  # d stays 1
-                d = 0
-                phase = 4
-                continue
-            if phase == 5:  # mantissa bit (pos stays fixed)
-                if mm > 1:
-                    mm >>= 1
-                    d = 1 if (sz & mm) else 0
-                    continue
-                break
-            if phase == 0:
-                if diff == 0:
-                    break  # result stays -1
-                sign = 1 if diff < 0 else 0
-                d = sign
-                pos = st + 1
-                phase = 1
-                continue
-            if phase == 1:
-                sz = (-diff if sign else diff) - 1
-                pos = st + 2 + sign
-                if sz:
-                    d = 1
-                    phase = 2
-                else:
-                    d = 0
-                    phase = 4  # terminator directly, m stays 0
-                continue
-            if phase == 2:  # encoded the magnitude-is->1 decision
-                m = 1
-                v2 = sz
-                pos = xbase
-                if v2 >> 1:
-                    d = 1
-                    phase = 3
-                else:
-                    d = 0
-                    phase = 4
-                continue
-            # phase 4: encoded the chain terminator
-            result = m
-            pos += 14
-            mm = m
-            if mm > 1:
-                mm >>= 1
-                d = 1 if (sz & mm) else 0
-                phase = 5
-                continue
-            break
-        self.a = a
-        self.c = c
-        self.ct = ct
-        return result
+        self.encode(bins, pos, 0)
+        pos += 14
+        mm = m
+        while mm > 1:
+            mm >>= 1
+            self.encode(bins, pos, 1 if (sz & mm) else 0)
+        return m
 
     def _byteout(self) -> None:
         t = self.c >> 19
@@ -2109,237 +1789,32 @@ class _QmDecoder:
         self.ct = ct
         return d
 
-    def decode_magnitude(self, bins: bytearray, i: int, xbase: int,
-                         mbase_off: int = 14) -> int | None:
-        """The shared magnitude decode (T.81 Figures F.23/F.24) in ONE
-        call instead of one :meth:`decode` call per decision (r12
-        optimization — the chains are the densest decision runs in
-        every arithmetic scan). The overwhelmingly common decision
-        outcome — MPS with no renormalization — is inlined as two
-        local integer ops; it replicates exactly :meth:`decode`'s
-        final ``else`` arm (``chigh < A−Qe`` and ``A−Qe`` keeps the
-        high bit ⇒ return MPS, ``A −= Qe``, C/CT/BP untouched), so
-        registers can stay in Python locals across the whole chain.
-        Every other outcome syncs ``A`` back and delegates to the
-        one full :meth:`decode` implementation — no duplicated
-        renormalization/exchange logic. Decisions, state transitions
-        and returned magnitudes are bit-identical to the per-call
-        form (md5-verified over the full fixture corpus + the
-        round-trip fuzz suites).
-
-        First decision at bin ``i`` says magnitude > 1; the category
-        chain then runs at ``xbase``; the mantissa reuses the chain's
-        stop position + ``mbase_off``. Returns v >= 1, or None on
-        overflow (malformed stream)."""
-        table = _QM_TABLE
-        a = self.a
-        c16 = self.c >> 16
-        st = bins[i]
-        an = a - table[st >> 1][0]
-        if c16 < an and an & 0x8000:
-            a = an
-            m = st & 1
-        else:
-            self.a = a
-            m = self.decode(bins, i)
-            a = self.a
-            c16 = self.c >> 16
-        pos = i
+    def decode_diff(self, bins: bytearray, st: int, chain: int) -> int | None:
+        """One signed-difference decode — the zero decision, the sign,
+        the magnitude category chain at ``chain`` and the mantissa bits
+        at the chain stop + 14 (Figures F.19/F.23/F.24): the per-sample
+        unit of the SOF11/H.2 scan and the per-block DC unit of the
+        SOF9/F.1.4 scan. Returns the signed difference (0 when the zero
+        decision fires), or None on overflow (malformed stream)."""
+        if self.decode(bins, st) == 0:
+            return 0
+        sign = self.decode(bins, st + 1)
+        pos = st + 2 + sign
+        m = self.decode(bins, pos)
         if m:
-            pos = xbase
-            while True:
-                st = bins[pos]
-                an = a - table[st >> 1][0]
-                if c16 < an and an & 0x8000:
-                    a = an
-                    d = st & 1
-                else:
-                    self.a = a
-                    d = self.decode(bins, pos)
-                    a = self.a
-                    c16 = self.c >> 16
-                if not d:
-                    break
+            pos = chain
+            while self.decode(bins, pos):
                 m <<= 1
                 if m == 0x8000:
-                    self.a = a
                     return None
                 pos += 1
         v = m
-        pos += mbase_off
+        pos += 14
         while m > 1:
             m >>= 1
-            st = bins[pos]
-            an = a - table[st >> 1][0]
-            if c16 < an and an & 0x8000:
-                a = an
-                d = st & 1
-            else:
-                self.a = a
-                d = self.decode(bins, pos)
-                a = self.a
-                c16 = self.c >> 16
-            if d:
+            if self.decode(bins, pos):
                 v |= m
-        self.a = a
-        return v + 1
-
-    def decode_diff(self, bins: bytearray, st: int, chain: int,
-                    mbase_off: int = 14) -> int | None:
-        """One signed-difference entropy decode — the zero decision,
-        the sign, and the magnitude chain — in a single call (r12):
-        the per-sample unit of the SOF11/H.2 scan and the per-block
-        DC unit of the SOF9/F.1.4 scan, which otherwise cost 3-6
-        :meth:`decode` calls each.
-
-        SYNC WARNING (ADVICE r12 #4): _arith_lossless_scan holds a
-        line-for-line inlined replica of this unit — mirror any
-        change there (test_inlined_lossless_scan_loops_* is the
-        gate).
-
-        Fully register-local (r12 batch 4): the chain/mantissa bits
-        are near-random, so the MPS-no-renorm fast path of the first
-        fused form missed most of the time and ~80% of decisions
-        still paid a delegate :meth:`decode` call. The WHOLE decision
-        — both subinterval arms, conditional exchange, state
-        transition, renormalization and BYTEIN — is now inlined ONCE
-        at the top of a small phase loop (zero → sign → magnitude>1 →
-        chain → mantissa), with every register (A, C, CT, BP,
-        marker_seen) held in Python locals across the whole unit and
-        written back only at the exits. The decision block is a
-        line-for-line replica of :meth:`decode`'s arms (which stays
-        the reference implementation for the scan-loop callers);
-        bit-exactness is pinned by
-        ``test_fused_qm_diff_units_match_per_call_form`` (streams,
-        statistics bins AND final register state vs the per-call
-        form) and the md5 corpus checks. Returns the signed
-        difference (0 when the zero decision fires), or None on
-        overflow (malformed stream)."""
-        table = _QM_TABLE
-        fixed = _QM_FIXED
-        buf = self.buf
-        n = self.n
-        a = self.a
-        c = self.c
-        ct = self.ct
-        bp = self.bp
-        marker_seen = self.marker_seen
-        # phases: 0 zero-decision @st, 1 sign @st+1, 2 magnitude>1
-        # @st+2+sign, 3 category chain @chain.., 4 mantissa (fixed pos)
-        phase = 0
-        pos = st
-        sign = 0
-        m = 0
-        v = 0
-        result: int | None = 0
-        while True:
-            # --- one QM decision at bins[pos] (decode() inlined) ---
-            stt = bins[pos]
-            idx = stt >> 1
-            mps = stt & 1
-            qe, nmps, nlps, switch = table[idx]
-            an = a - qe
-            if (c >> 16) < an and an & 0x8000:
-                a = an
-                d = mps  # MPS, no renormalization: nothing else moves
-            else:
-                if (c >> 16) >= an:
-                    # upper subinterval
-                    c -= an << 16
-                    if an < qe:
-                        d = mps
-                        if idx != fixed:
-                            bins[pos] = (nmps << 1) | mps
-                    else:
-                        d = mps ^ 1
-                        if idx != fixed:
-                            if switch:
-                                mps ^= 1
-                            bins[pos] = (nlps << 1) | mps
-                    a = qe
-                else:
-                    if an < qe:
-                        d = mps ^ 1
-                        if idx != fixed:
-                            if switch:
-                                mps ^= 1
-                            bins[pos] = (nlps << 1) | mps
-                    else:
-                        d = mps
-                        if idx != fixed:
-                            bins[pos] = (nmps << 1) | mps
-                    a = an
-                # renormalization + BYTEIN (decode() inlined)
-                while a & 0x8000 == 0:
-                    if ct == 0:
-                        # _next_byte() inlined
-                        if marker_seen or bp >= n:
-                            b = 0x00
-                        else:
-                            b = buf[bp]
-                            if b == 0xFF:
-                                if bp + 1 < n and buf[bp + 1] == 0x00:
-                                    bp += 2  # stuffed zero: data 0xFF
-                                else:
-                                    marker_seen = True
-                                    b = 0x00
-                            else:
-                                bp += 1
-                        c |= b << 8
-                        ct = 8
-                    c = (c << 1) & 0xFFFFFFFF
-                    a = (a << 1) & 0xFFFF
-                    ct -= 1
-            # --- phase transition ---
-            if phase == 3:  # category chain (the densest run)
-                if d:
-                    m <<= 1
-                    if m == 0x8000:
-                        result = None
-                        break
-                    pos += 1
-                    continue
-                v = m
-                pos += mbase_off
-                if m > 1:
-                    m >>= 1
-                    phase = 4
-                    continue
-                result = -(v + 1) if sign else (v + 1)
-                break
-            if phase == 4:  # mantissa bit (pos stays fixed)
-                if d:
-                    v |= m
-                if m > 1:
-                    m >>= 1
-                    continue
-                result = -(v + 1) if sign else (v + 1)
-                break
-            if phase == 0:
-                if d == 0:
-                    break  # result stays 0
-                phase = 1
-                pos = st + 1
-                continue
-            if phase == 1:
-                sign = d
-                phase = 2
-                pos = st + 2 + sign
-                continue
-            # phase 2: magnitude-is->1 decision
-            if d:
-                m = 1
-                phase = 3
-                pos = chain
-                continue
-            result = -1 if sign else 1  # |magnitude| == 1
-            break
-        self.a = a
-        self.c = c
-        self.ct = ct
-        self.bp = bp
-        self.marker_seen = marker_seen
-        return result
+        return -(v + 1) if sign else (v + 1)
 
 
 def _arith_next_marker(buf: bytes, pos: int) -> int | None:
@@ -2354,18 +1829,6 @@ def _arith_next_marker(buf: bytes, pos: int) -> int | None:
             return pos
         pos += 1
     return None
-
-
-def _arith_decode_magnitude(dec, bins, st, xbase, mbase_off=14):
-    """Shared magnitude decode (T.81 Figures F.23/F.24): the first
-    decision at ``st`` says magnitude > 1; the category chain then
-    runs at ``xbase`` (X bins); the bit pattern reuses the chain's
-    stop position + ``mbase_off`` (the M bin column). Returns the
-    decoded magnitude v >= 1, or None on overflow (malformed).
-
-    Delegates to :meth:`_QmDecoder.decode_magnitude` — the fused
-    register-local form of exactly this loop (r12 optimization)."""
-    return dec.decode_magnitude(bins, st, xbase, mbase_off)
 
 
 def _arith_scan_blocks(
@@ -2453,9 +1916,8 @@ def _arith_scan_blocks(
             abins = ac_stats[ta]
             for _ in range(nblocks):
                 block = None
-                # DC (Figures F.19/F.22-F.26, Table F.4) — one fused
-                # decode_diff call per block (r12; the zero/sign/
-                # magnitude sequence is the same H.2 unit)
+                # DC (Figures F.19/F.22-F.26, Table F.4): the same
+                # zero/sign/magnitude unit as the H.2 sample
                 st = dc_ctx[cid]
                 diff = dec.decode_diff(dbins, st, 20)
                 if diff is None:
@@ -2722,8 +2184,8 @@ def _arith_prog_dc_scan(
                     bx = mbx * comp[1] + sh
                 blk = grids.setdefault(cid, {}).setdefault((by, bx), [0] * 64)
                 if ah == 0:
-                    # fused decode_diff (r12): same zero/sign/
-                    # magnitude unit as the sequential DC path
+                    # same zero/sign/magnitude unit as the
+                    # sequential DC path
                     st = dc_ctx[cid]
                     diff = dec.decode_diff(dbins, st, 20)
                     if diff is None:
@@ -3079,160 +2541,29 @@ def _arith_lossless_scan(
         return out
 
     comp_slots = slots()
-    # r12: decode_diff inlined into the pixel loop — this scan is the
-    # densest caller (one signed-difference unit per sample), and the
-    # remaining per-unit cost after the batch-4 fusing was the method
-    # call itself plus the register load/store at its edges. The QM
-    # registers (A, C, CT, BP, marker_seen) now live in Python locals
-    # across the WHOLE scan, re-pulled only at restart boundaries
-    # (where the decoder is re-initialized anyway). The decision body
-    # and phase machine below are a line-for-line replica of
-    # :meth:`_QmDecoder.decode_diff` (the reference implementation,
-    # still used by the per-block DC callers); bit-exactness is pinned
-    # by the interleaved old-vs-new corpus identity check recorded in
-    # OPTIMIZATION_r12.md and the lossless round-trip/DRI/fuzz suites.
-    table = _QM_TABLE
-    fixed = _QM_FIXED
-    n = len(buf)
-    chain_a = _QM_LL_CHAIN_A
-    chain_b = _QM_LL_CHAIN_B
-    a = dec.a
-    c = dec.c
-    ct = dec.ct
-    bp = dec.bp
-    marker_seen = dec.marker_seen
     for mi in range(width * height):
         if restart_interval and mi and mi % restart_interval == 0:
-            mk = _arith_next_marker(buf, bp)
+            mk = _arith_next_marker(buf, dec.bp)
             if mk is None or buf[mk + 1] != 0xD0 + (rst & 7):
                 return None
             rst += 1
             stats, dgrid = fresh()
             comp_slots = slots()
             dec = _QmDecoder(buf, mk + 2)
-            a = dec.a
-            c = dec.c
-            ct = dec.ct
-            bp = dec.bp
-            marker_seen = dec.marker_seen
             fresh_sample = True
             first_line = mi // width
         y, x = divmod(mi, width)
         for small, bins, drow, g in comp_slots:
             da = drow[y & 1][x - 1] if x else 0
             db = drow[(y - 1) & 1][x] if y else 0
-            # cb hoisted: the context and the chain selector both
-            # classify db (was computed twice per sample)
+            # the context and the chain selector both classify db
             cb = _ll_cat(db, small)
             st = 4 * (5 * _ll_cat(da, small) + cb)
-            chain = chain_b if cb >= 3 else chain_a
-            # --- decode_diff body (phases: 0 zero @st, 1 sign @st+1,
-            # 2 magnitude>1 @st+2+sign, 3 chain, 4 mantissa @+14) ---
-            phase = 0
-            pos_b = st
-            sign = 0
-            m = 0
-            v = 0
-            diff = 0
-            while True:
-                stt = bins[pos_b]
-                idx = stt >> 1
-                mps = stt & 1
-                qe, nmps, nlps, switch = table[idx]
-                an = a - qe
-                if (c >> 16) < an and an & 0x8000:
-                    a = an
-                    d = mps  # MPS, no renormalization
-                else:
-                    if (c >> 16) >= an:
-                        # upper subinterval
-                        c -= an << 16
-                        if an < qe:
-                            d = mps
-                            if idx != fixed:
-                                bins[pos_b] = (nmps << 1) | mps
-                        else:
-                            d = mps ^ 1
-                            if idx != fixed:
-                                if switch:
-                                    mps ^= 1
-                                bins[pos_b] = (nlps << 1) | mps
-                        a = qe
-                    else:
-                        if an < qe:
-                            d = mps ^ 1
-                            if idx != fixed:
-                                if switch:
-                                    mps ^= 1
-                                bins[pos_b] = (nlps << 1) | mps
-                        else:
-                            d = mps
-                            if idx != fixed:
-                                bins[pos_b] = (nmps << 1) | mps
-                        a = an
-                    # renormalization + BYTEIN
-                    while a & 0x8000 == 0:
-                        if ct == 0:
-                            if marker_seen or bp >= n:
-                                b = 0x00
-                            else:
-                                b = buf[bp]
-                                if b == 0xFF:
-                                    if bp + 1 < n and buf[bp + 1] == 0x00:
-                                        bp += 2  # stuffed zero
-                                    else:
-                                        marker_seen = True
-                                        b = 0x00
-                                else:
-                                    bp += 1
-                            c |= b << 8
-                            ct = 8
-                        c = (c << 1) & 0xFFFFFFFF
-                        a = (a << 1) & 0xFFFF
-                        ct -= 1
-                # --- phase transition ---
-                if phase == 3:  # category chain
-                    if d:
-                        m <<= 1
-                        if m == 0x8000:
-                            return None  # overflow: malformed stream
-                        pos_b += 1
-                        continue
-                    v = m
-                    pos_b += 14
-                    if m > 1:
-                        m >>= 1
-                        phase = 4
-                        continue
-                    diff = -(v + 1) if sign else (v + 1)
-                    break
-                if phase == 4:  # mantissa bit (pos stays fixed)
-                    if d:
-                        v |= m
-                    if m > 1:
-                        m >>= 1
-                        continue
-                    diff = -(v + 1) if sign else (v + 1)
-                    break
-                if phase == 0:
-                    if d == 0:
-                        break  # diff stays 0
-                    phase = 1
-                    pos_b = st + 1
-                    continue
-                if phase == 1:
-                    sign = d
-                    phase = 2
-                    pos_b = st + 2 + sign
-                    continue
-                # phase 2: magnitude-is->1 decision
-                if d:
-                    m = 1
-                    phase = 3
-                    pos_b = chain
-                    continue
-                diff = -1 if sign else 1  # |magnitude| == 1
-                break
+            diff = dec.decode_diff(
+                bins, st, _QM_LL_CHAIN_B if cb >= 3 else _QM_LL_CHAIN_A
+            )
+            if diff is None:
+                return None  # overflow: malformed stream
             drow[y & 1][x] = diff
             if fresh_sample:
                 px = default
@@ -3244,7 +2575,7 @@ def _arith_lossless_scan(
                 px = pred_fn(g[y][x - 1], g[y - 1][x], g[y - 1][x - 1])
             g[y][x] = (px + diff) & 0xFFFF
         fresh_sample = False
-    return _skip_entropy(buf, bp)
+    return _skip_entropy(buf, dec.bp)
 
 
 def _parse_jpeg_arith_lossless(
@@ -3399,39 +2730,12 @@ def encode_jpeg_arith_lossless(
     fresh_sample = True
     first_line = 0
     rst = 0
-    # r12: encode_diff inlined into the sample loop — the encoder
-    # mirror of the decoder-side inline in _arith_lossless_scan (one
-    # signed-difference unit per sample; the remaining per-unit cost
-    # after batch 4 was the method call + register load/store at its
-    # edges). A/C/CT live in Python locals across the whole scan,
-    # synced back only at flush boundaries; ``raw`` is shared by
-    # reference. The decision body and phase machine replicate
-    # :meth:`_QmEncoder.encode_diff` line for line (the reference
-    # implementation, still used by the block encoders); the unused
-    # chain-MSB return value is dropped. Byte-exactness pinned by the
-    # interleaved old-vs-new corpus identity check and the round-trip
-    # suites.
-    table = _QM_TABLE
-    fixed = _QM_FIXED
-    chain_a = _QM_LL_CHAIN_A
-    chain_b = _QM_LL_CHAIN_B
-    a = enc.a
-    c = enc.c
-    ct = enc.ct
-    raw = enc.raw
     for mi in range(w * h):
         if restart_interval and mi and mi % restart_interval == 0:
-            enc.a = a
-            enc.c = c
-            enc.ct = ct
             out += enc.flush()
             out += bytes([0xFF, 0xD0 + (rst & 7)])
             rst += 1
             enc, stats, dgrid = fresh()
-            a = enc.a
-            c = enc.c
-            ct = enc.ct
-            raw = enc.raw
             fresh_sample = True
             first_line = mi // w
         y, x = divmod(mi, w)
@@ -3450,128 +2754,15 @@ def encode_jpeg_arith_lossless(
             drow = dgrid[ci]
             da = drow[y & 1][x - 1] if x else 0
             db = drow[(y - 1) & 1][x] if y else 0
-            # cb hoisted (context + chain both classify db)
             cb = _ll_cat(db, small)
             st = 4 * (5 * _ll_cat(da, small) + cb)
-            xbase = chain_b if cb >= 3 else chain_a
-            # --- encode_diff body (phases: 0 zero @st, 1 sign @st+1,
-            # 2 magnitude>1 @st+2+sign, 3 chain @xbase.., 4
-            # terminator, 5 mantissa @+14; d KNOWN from diff) ---
-            sign = 0
-            sz = 0
-            v2 = 0
-            m = 0
-            mm = 0
-            phase = 0
-            pos_b = st
-            d = 1 if diff else 0
-            while True:
-                stt = stats[pos_b]
-                idx = stt >> 1
-                mps = stt & 1
-                qe, nmps, nlps, switch = table[idx]
-                an = a - qe
-                if d == mps and an & 0x8000:
-                    a = an  # MPS, no renormalization
-                else:
-                    if d == mps:
-                        if an < qe:  # conditional exchange: MPS top
-                            c += an
-                            an = qe
-                        if idx != fixed:
-                            stats[pos_b] = (nmps << 1) | mps
-                    else:
-                        if an >= qe:  # LPS takes the top
-                            c += an
-                            an = qe
-                        # else conditional exchange: LPS keeps bottom
-                        if idx != fixed:
-                            if switch:
-                                mps ^= 1
-                            stats[pos_b] = (nlps << 1) | mps
-                    # renorm + BYTEOUT with carry
-                    while True:
-                        an <<= 1
-                        c <<= 1
-                        ct -= 1
-                        if ct == 0:
-                            t = c >> 19
-                            if t > 0xFF:
-                                j = len(raw) - 1
-                                while j >= 0 and raw[j] == 0xFF:
-                                    raw[j] = 0x00
-                                    j -= 1
-                                if j < 0:  # code >= 1.0: impossible
-                                    raise ValueError(
-                                        "arithmetic carry out of stream"
-                                    )
-                                raw[j] += 1
-                                t &= 0xFF
-                            raw.append(t)
-                            c &= 0x7FFFF
-                            ct = 8
-                        if an & 0x8000:
-                            break
-                    a = an
-                # --- phase transition: the NEXT (pos, d) ---
-                if phase == 3:  # category chain
-                    m <<= 1
-                    v2 >>= 1
-                    pos_b += 1
-                    if v2 >> 1:
-                        continue  # d stays 1
-                    d = 0
-                    phase = 4
-                    continue
-                if phase == 5:  # mantissa bit (pos stays fixed)
-                    if mm > 1:
-                        mm >>= 1
-                        d = 1 if (sz & mm) else 0
-                        continue
-                    break
-                if phase == 0:
-                    if diff == 0:
-                        break
-                    sign = 1 if diff < 0 else 0
-                    d = sign
-                    pos_b = st + 1
-                    phase = 1
-                    continue
-                if phase == 1:
-                    sz = (-diff if sign else diff) - 1
-                    pos_b = st + 2 + sign
-                    if sz:
-                        d = 1
-                        phase = 2
-                    else:
-                        d = 0
-                        phase = 4  # terminator directly, m stays 0
-                    continue
-                if phase == 2:  # encoded the magnitude-is->1 decision
-                    m = 1
-                    v2 = sz
-                    pos_b = xbase
-                    if v2 >> 1:
-                        d = 1
-                        phase = 3
-                    else:
-                        d = 0
-                        phase = 4
-                    continue
-                # phase 4: encoded the chain terminator
-                pos_b += 14
-                mm = m
-                if mm > 1:
-                    mm >>= 1
-                    d = 1 if (sz & mm) else 0
-                    phase = 5
-                    continue
-                break
+            enc.encode_diff(
+                stats, st,
+                _QM_LL_CHAIN_B if cb >= 3 else _QM_LL_CHAIN_A,
+                diff,
+            )
             drow[y & 1][x] = diff
         fresh_sample = False
-    enc.a = a
-    enc.c = c
-    enc.ct = ct
     out += enc.flush()
     out += b"\xff\xd9"
     return bytes(out)
@@ -3591,37 +2782,12 @@ class _ArithBlockEncoder:
         self.last_dc = 0
         self.dc_ctx = 0
 
-    def _magnitude(self, bins, st, xbase, v):
-        # Figures F.6/F.7: category chain then bit pattern
-        sz = v - 1
-        pos = st
-        m = 0
-        if sz:
-            self.qm.encode(bins, pos, 1)
-            m = 1
-            v2 = sz
-            pos = xbase
-            while v2 >> 1:
-                self.qm.encode(bins, pos, 1)
-                m <<= 1
-                v2 >>= 1
-                pos += 1
-        self.qm.encode(bins, pos, 0)
-        mm = m
-        pos += 14
-        while mm > 1:
-            mm >>= 1
-            self.qm.encode(bins, pos, 1 if (sz & mm) else 0)
-        return m
-
     def put_dc(self, dc: int) -> None:
         """The DC figures alone (Figures F.4/F.6/F.7) — shared by the
         sequential scan and the progressive DC-first scan (which must
         emit NO AC decisions)."""
         diff = dc - self.last_dc
         self.last_dc = dc
-        # fused encode_diff (r12): the same decision sequence as the
-        # old encode/encode/_magnitude triple, one call per block
         m = self.qm.encode_diff(self.dc, self.dc_ctx, 20, diff)
         if m < 0:
             self.dc_ctx = 0
@@ -4677,112 +3843,27 @@ def _decode_lossless_scan(
     pred_fn = _LL_PREDICT[predictor]
     fresh = True  # scan start / just after a restart marker
     first_line = 0  # row where the current restart interval began
-    # r12 batch 4: this one loop drives ~80% of all bit-reader calls
-    # in the fixture corpus (one huff + one read per SAMPLE), so the
-    # reader's registers live in locals across the whole scan and the
-    # LUT fast path of huff() / read() / _fill() are inlined. Every
-    # slow path — non-LUT table, invalid prefix, marker-truncated
-    # register, restart sync — syncs the locals back into the reader,
-    # delegates to the ONE reference implementation, and reloads, so
-    # decisions are identical by construction (pinned by the lossless
-    # round-trip + DRI/restart + mutation-fuzz suites and the corpus
-    # md5 checks).
-    buflen = len(buf)
-    bits = 0
-    nbits = 0
-    rpos = reader.pos
-    marker: int | None = None
     for m in range(width * height):
         if restart_interval and m and m % restart_interval == 0:
-            reader.bits, reader.nbits = bits, nbits
-            reader.pos, reader.marker = rpos, marker
             mk = reader.sync_marker()
             if mk is None or not 0xD0 <= mk <= 0xD7:
                 return None
-            bits, nbits = reader.bits, reader.nbits
-            rpos, marker = reader.pos, reader.marker
             fresh = True
             first_line = m // width
         y, x = divmod(m, width)
         for cid, tab in scan_tabs:
-            # --- reader.huff(tab) inlined: flat-LUT fast path ---
-            s = None
-            try:
-                lut = tab._lut
-            except AttributeError:  # plain dict (hand-built in tests)
-                lut = None
-            if lut is not None:
-                maxlen = tab._maxlen
-                while nbits < maxlen:
-                    # --- reader._fill() inlined ---
-                    if marker is not None or rpos >= buflen:
-                        break
-                    b = buf[rpos]
-                    if b == 0xFF:
-                        if rpos + 1 >= buflen:
-                            break
-                        nxt = buf[rpos + 1]
-                        if nxt == 0x00:
-                            rpos += 2  # stuffed zero: data byte 0xFF
-                        else:
-                            marker = nxt
-                            break
-                    else:
-                        rpos += 1
-                    bits = (bits << 8) | b
-                    nbits += 8
-                if nbits >= maxlen:
-                    entry = lut[
-                        (bits >> (nbits - maxlen)) & ((1 << maxlen) - 1)
-                    ]
-                    if entry is not None:
-                        length, s = entry
-                        nbits -= length
-                        bits &= (1 << nbits) - 1
-            if s is None:
-                # slow path: sync, delegate, reload
-                reader.bits, reader.nbits = bits, nbits
-                reader.pos, reader.marker = rpos, marker
-                s = reader.huff(tab)
-                if s is None or s > 16:
-                    return None
-                bits, nbits = reader.bits, reader.nbits
-                rpos, marker = reader.pos, reader.marker
-            elif s > 16:
+            s = reader.huff(tab)
+            if s is None or s > 16:
                 return None
             if s == 16:
-                diff = 32768
+                diff = 32768  # category 16: no extension bits
             elif s == 0:
                 diff = 0
             else:
-                # --- reader.read(s) + _jpeg_extend inlined ---
-                ok = True
-                while nbits < s:
-                    if marker is not None or rpos >= buflen:
-                        ok = False
-                        break
-                    b = buf[rpos]
-                    if b == 0xFF:
-                        if rpos + 1 >= buflen:
-                            ok = False
-                            break
-                        nxt = buf[rpos + 1]
-                        if nxt == 0x00:
-                            rpos += 2
-                        else:
-                            marker = nxt
-                            ok = False
-                            break
-                    else:
-                        rpos += 1
-                    bits = (bits << 8) | b
-                    nbits += 8
-                if not ok:
+                v = reader.read(s)
+                if v is None:
                     return None
-                nbits -= s
-                v = (bits >> nbits) & ((1 << s) - 1)
-                bits &= (1 << nbits) - 1
-                diff = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+                diff = _jpeg_extend(v, s)
             g = grids[cid]
             if fresh:
                 px = default
@@ -4799,7 +3880,7 @@ def _decode_lossless_scan(
                 px = pred_fn(g[y][x - 1], g[y - 1][x], g[y - 1][x - 1])
             g[y][x] = (px + diff) & 0xFFFF
         fresh = False
-    return _skip_entropy(buf, rpos)
+    return _skip_entropy(buf, reader.pos)
 
 
 def _parse_jpeg_lossless(
@@ -4963,29 +4044,13 @@ def encode_jpeg_lossless(
     fresh = True
     rst = 0
     first_line = 0
-    # r12 batch 4: this loop drives ~70% of all bit-writer put()
-    # calls in the fixture corpus (category + extension per SAMPLE).
-    # The category code and its extension bits concatenate into ONE
-    # put, inlined with the accumulator in locals — byte-identical:
-    # the drain emits the same bit stream at the same 8-bit
-    # boundaries, and stuffing depends only on byte values. Restart
-    # padding syncs the locals back through the writer's reference
-    # pad() (pinned by the lossless round-trip + DRI suites).
-    out_w = wtr.out
-    acc = 0
-    nb = 0
-    enc16 = enc[16]
     for m in range(w * h):
         if restart_interval and m and m % restart_interval == 0:
-            wtr.acc, wtr.n = acc, nb
             wtr.pad()
             out += wtr.out
             out += bytes([0xFF, 0xD0 + (rst & 7)])
             rst += 1
             wtr = _JpegBitWriter()
-            out_w = wtr.out
-            acc = 0
-            nb = 0
             fresh = True
             first_line = m // w
         y, x = divmod(m, w)
@@ -5002,28 +4067,13 @@ def encode_jpeg_lossless(
                 px = pred_fn(g[y][x - 1], g[y - 1][x], g[y - 1][x - 1])
             diff = ((g[y][x] - px + 32768) & 0xFFFF) - 32768
             if diff == -32768:
-                code, length = enc16  # category 16: no extension bits
-            else:
-                s = abs(diff).bit_length()
-                code, length = enc[s]
-                if s:
-                    ext = (diff if diff >= 0 else diff - 1) & (
-                        (1 << s) - 1
-                    )
-                    code = (code << s) | ext
-                    length += s
-            # --- wtr.put(code, length) inlined ---
-            acc = (acc << length) | code
-            nb += length
-            while nb >= 8:
-                nb -= 8
-                b = (acc >> nb) & 0xFF
-                out_w.append(b)
-                if b == 0xFF:
-                    out_w.append(0x00)  # byte stuffing
-            acc &= (1 << nb) - 1
+                wtr.put(*enc[16])  # category 16: no extension bits
+                continue
+            s = abs(diff).bit_length()
+            wtr.put(*enc[s])
+            if s:
+                wtr.put(diff if diff >= 0 else diff - 1, s)
         fresh = False
-    wtr.acc, wtr.n = acc, nb
     wtr.pad()
     out += wtr.out
     out += b"\xff\xd9"

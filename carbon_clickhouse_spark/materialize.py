@@ -1,4 +1,4 @@
-"""Pluggable reuse-materialization strategy (r13, VERDICT r12 #6).
+"""Reuse materialization for shared intermediates.
 
 Several operators compute an expensive narrow table once and read it
 from more than one consumer (LSH bucket tables, the DSIR ratio table,
@@ -6,62 +6,32 @@ the find-metrics index, CCNet scores, reference tokenization). Spark
 plans each consumer independently, so without an explicit
 materialization the producing pipeline runs once PER consumer.
 
-The engine has used ``localCheckpoint(eager=False)`` for this. Its
-caveats at the 100 TB posture (documented Spark behavior):
+The strategy follows from where the session runs, so there is nothing
+to configure:
 
-- lineage is truncated, so an executor loss mid-query FAILS the job
-  instead of recomputing, and the blocks are not replicated;
-- the checkpointed blocks stay in executor storage for the app
-  lifetime (no automatic unpersist).
+- on a ``local*`` master, lazy ``localCheckpoint``: the fastest form.
+  It truncates lineage and keeps unreplicated blocks for the app
+  lifetime, which costs nothing when driver and executors are one JVM
+  that cannot lose an executor on its own.
+- on any other master, lazy ``persist(MEMORY_AND_DISK)``: it KEEPS
+  lineage (an executor loss recomputes the lost partitions), spills to
+  disk under memory pressure, and can be released with ``unpersist()``.
 
-``materialize()`` keeps the call sites one-line and makes the
-strategy an env choice, so a deployment can trade local speed for
-fault tolerance without code changes:
-
-``SPARK_GRAFT_MATERIALIZE=``
-  ``local_checkpoint``  (default) lazy ``localCheckpoint`` — the
-      r12 behavior: fastest locally, lineage truncated.
-  ``persist``  ``persist(MEMORY_AND_DISK)`` — lazy, KEEPS lineage
-      (an executor loss recomputes the lost partitions), spills to
-      disk under memory pressure. The safe cluster default.
-  ``checkpoint``  reliable ``checkpoint(eager=False)`` to the
-      configured ``spark.sparkContext.setCheckpointDir`` — survives
-      executor loss via the shared filesystem; for the truly huge
-      intermediates.
-  ``none``  no materialization (every consumer recomputes) — for
-      measurement and debugging only.
-
-All strategies return the SAME rows; only reuse mechanics and
-failure semantics differ. A strategy choice never changes what a
-query computes (pinned by tests/test_materialize.py).
+Both strategies return the SAME rows; only reuse mechanics and failure
+semantics differ (pinned by tests/test_materialize.py).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-
-_VALID = ("local_checkpoint", "persist", "checkpoint", "none")
 
 
 def materialize(df: DataFrame) -> DataFrame:
-    """Mark ``df`` for one-time computation and multi-consumer reuse
-    under the strategy named by ``$SPARK_GRAFT_MATERIALIZE`` (default
-    ``local_checkpoint``; see the module docstring)."""
-    mode = os.environ.get(
-        "SPARK_GRAFT_MATERIALIZE", "local_checkpoint"
-    )
-    if mode not in _VALID:
-        raise ValueError(
-            f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected one of {_VALID}"
-        )
-    if mode == "local_checkpoint":
+    """Mark ``df`` for one-time computation and multi-consumer reuse:
+    ``localCheckpoint`` in local mode, ``persist(MEMORY_AND_DISK)``
+    otherwise (see the module docstring)."""
+    if df.sparkSession.sparkContext.master.startswith("local"):
         return df.localCheckpoint(eager=False)
-    if mode == "persist":
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    if mode == "checkpoint":
-        return df.checkpoint(eager=False)
-    return df
+    return df.persist(StorageLevel.MEMORY_AND_DISK)

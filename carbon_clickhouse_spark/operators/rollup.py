@@ -284,25 +284,28 @@ def rollup_sets(
     )
 
 
-def rules_from_xml(path_or_text: str) -> tuple[RollupRule, ...]:
-    """Parse a ClickHouse ``graphite_rollup`` XML config (the exact
-    file the reference points its tables at, e.g.
-    ``tests/clickhouse/rollup/rollup.xml``) into RollupRules.
+def rules_from_xml(path: str) -> tuple[RollupRule, ...]:
+    """Parse the ClickHouse ``graphite_rollup`` XML config file at
+    ``path`` (the exact file the reference points its tables at, e.g.
+    ``tests/clickhouse/rollup/rollup.xml``) into RollupRules. A missing
+    file raises ``FileNotFoundError`` naming ``path``; see
+    :func:`rules_from_xml_text` for the format."""
+    with open(path, "rb") as fh:
+        return rules_from_xml_text(fh.read())
+
+
+def rules_from_xml_text(text: str | bytes) -> tuple[RollupRule, ...]:
+    """Parse ``graphite_rollup`` XML text into RollupRules.
 
     ``<pattern>`` entries keep document order; ``<default>`` becomes
     the trailing match-all rule. Patterns may carry only a function or
     only retentions — first-match resolution per side is already the
     engine's semantics (GraphiteMergeTree resolves them
-    independently). Accepts a filesystem path or raw XML text, and
-    either a bare ``<graphite_rollup>`` root or the ``<yandex>`` /
-    ``<clickhouse>`` server-config wrapper."""
-    import os
+    independently). Accepts either a bare ``<graphite_rollup>`` root or
+    the ``<yandex>`` / ``<clickhouse>`` server-config wrapper."""
     import xml.etree.ElementTree as ET
 
-    if os.path.exists(path_or_text):
-        root = ET.parse(path_or_text).getroot()
-    else:
-        root = ET.fromstring(path_or_text)
+    root = ET.fromstring(text)
     section = root if root.tag == "graphite_rollup" else root.find(
         ".//graphite_rollup"
     )

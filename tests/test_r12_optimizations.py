@@ -3,6 +3,7 @@ the Huffman prefix-LUT fast path must be indistinguishable from the
 bitwise walk, and the fused multi-rule-set rollup must equal the
 union of single rollup passes row-for-row."""
 
+import hashlib
 import random
 import struct
 
@@ -162,112 +163,6 @@ def test_rollup_sets_equals_union_of_rollups(spark):
     assert got == expect
 
 
-# --- fused QM-coder units (decode_diff / decode_magnitude /
-# encode_diff) must be decision-for-decision identical to the
-# per-call form -------------------------------------------------------
-
-
-def _reference_encode_diff(enc, bins, st, xbase, diff):
-    """The pre-fusion per-call encode sequence (the exact loop the
-    SOF11 encoder and put_dc ran), kept here as the spec mirror."""
-    if diff == 0:
-        enc.encode(bins, st, 0)
-        return -1
-    enc.encode(bins, st, 1)
-    sign = 1 if diff < 0 else 0
-    enc.encode(bins, st + 1, sign)
-    v = -diff if sign else diff
-    sz = v - 1
-    pos = st + 2 + sign
-    m = 0
-    if sz:
-        enc.encode(bins, pos, 1)
-        m = 1
-        v2 = sz
-        pos = xbase
-        while v2 >> 1:
-            enc.encode(bins, pos, 1)
-            m <<= 1
-            v2 >>= 1
-            pos += 1
-    enc.encode(bins, pos, 0)
-    pos += 14
-    mm = m
-    while mm > 1:
-        mm >>= 1
-        enc.encode(bins, pos, 1 if (sz & mm) else 0)
-    return m
-
-
-def _reference_decode_diff(dec, bins, st, chain):
-    """The pre-fusion per-call decode sequence."""
-    if dec.decode(bins, st) == 0:
-        return 0
-    sign = dec.decode(bins, st + 1)
-    m = dec.decode(bins, st + 2 + sign)
-    pos = st + 2 + sign
-    if m:
-        pos = chain
-        while dec.decode(bins, pos):
-            m <<= 1
-            if m == 0x8000:
-                return None
-            pos += 1
-    v = m
-    pos += 14
-    while m > 1:
-        m >>= 1
-        if dec.decode(bins, pos):
-            v |= m
-    return -(v + 1) if sign else (v + 1)
-
-
-def test_fused_qm_diff_units_match_per_call_form():
-    """Random signed-difference streams through encode_diff /
-    decode_diff vs the per-call reference: byte-identical bitstreams,
-    identical statistics areas, identical decoded values — including
-    streams long enough to renormalize and carry many times."""
-    from carbon_clickhouse_spark.datapipe.multimodal import (
-        _QM_LL_BINS,
-        _QM_LL_CHAIN_A,
-        _QmDecoder,
-        _QmEncoder,
-    )
-
-    rng = random.Random(1234)
-    for trial in range(40):
-        diffs = [
-            rng.choice([0, 0, 1, -1, 2, -3, 7, -15, 100, -1000, 20000])
-            for _ in range(rng.randint(1, 200))
-        ]
-        sts = [4 * rng.randrange(25) for _ in diffs]
-
-        enc_a, enc_b = _QmEncoder(), _QmEncoder()
-        bins_a = bytearray(_QM_LL_BINS)
-        bins_b = bytearray(_QM_LL_BINS)
-        for d, st in zip(diffs, sts):
-            ma = enc_a.encode_diff(bins_a, st, _QM_LL_CHAIN_A, d)
-            mb = _reference_encode_diff(enc_b, bins_b, st, _QM_LL_CHAIN_A, d)
-            assert ma == mb
-        assert bins_a == bins_b
-        stream_a = enc_a.flush()
-        stream_b = enc_b.flush()
-        assert stream_a == stream_b
-
-        dec_a = _QmDecoder(stream_a, 0)
-        dec_b = _QmDecoder(stream_b, 0)
-        dbins_a = bytearray(_QM_LL_BINS)
-        dbins_b = bytearray(_QM_LL_BINS)
-        for d, st in zip(diffs, sts):
-            ga = dec_a.decode_diff(dbins_a, st, _QM_LL_CHAIN_A)
-            gb = _reference_decode_diff(dec_b, dbins_b, st, _QM_LL_CHAIN_A)
-            assert ga == gb == d
-        assert dbins_a == dbins_b
-        assert (dec_a.a, dec_a.c, dec_a.ct, dec_a.bp) == (
-            dec_b.a, dec_b.c, dec_b.ct, dec_b.bp
-        )
-
-
 def test_huff_table_memo_returns_equal_tables():
     """The DHT memo must hand back a table identical to a fresh
     build, and distinct specs must not collide."""
@@ -294,324 +189,6 @@ def _sos_end(p: bytes) -> int:
         (ln,) = struct.unpack_from(">H", p, i + 2)
         i += 2 + ln
     return i + 2 + struct.unpack_from(">H", p, i + 2)[0]
-
-
-def _reference_arith_lossless_entropy(
-    coded, w, h, predictor, pt, precision, restart_interval
-):
-    """The PRE-INLINE encoder sample loop: one
-    :meth:`_QmEncoder.encode_diff` call per sample — the per-call
-    reference form the r12 inlined loop in
-    ``encode_jpeg_arith_lossless`` must reproduce byte for byte.
-    Returns only the entropy bytes (flushes + RSTn markers)."""
-    from carbon_clickhouse_spark.datapipe import multimodal as mm
-
-    default = 1 << (precision - pt - 1)
-    pred_fn = mm._LL_PREDICT[predictor]
-    small = (1 << 1) >> 1
-
-    def fresh():
-        enc = mm._QmEncoder()
-        stats = bytearray(mm._QM_LL_BINS)
-        diffs = [[[0] * w for _ in range(2)] for _ in coded]
-        return enc, stats, diffs
-
-    out = bytearray()
-    enc, stats, dgrid = fresh()
-    fresh_sample = True
-    first_line = 0
-    rst = 0
-    for m in range(w * h):
-        if restart_interval and m and m % restart_interval == 0:
-            out += enc.flush()
-            out += bytes([0xFF, 0xD0 + (rst & 7)])
-            rst += 1
-            enc, stats, dgrid = fresh()
-            fresh_sample = True
-            first_line = m // w
-        y, x = divmod(m, w)
-        for ci, g in enumerate(coded):
-            if fresh_sample:
-                px = default
-            elif y == first_line:
-                px = g[y][x - 1]
-            elif x == 0:
-                px = g[y - 1][0]
-            else:
-                px = pred_fn(g[y][x - 1], g[y - 1][x], g[y - 1][x - 1])
-            diff = ((g[y][x] - px + 32768) & 0xFFFF) - 32768
-            if diff == -32768:
-                diff = 32768
-            drow = dgrid[ci]
-            da = drow[y & 1][x - 1] if x else 0
-            db = drow[(y - 1) & 1][x] if y else 0
-            cb = mm._ll_cat(db, small)
-            st = 4 * (5 * mm._ll_cat(da, small) + cb)
-            enc.encode_diff(
-                stats, st,
-                mm._QM_LL_CHAIN_B if cb >= 3 else mm._QM_LL_CHAIN_A,
-                diff,
-            )
-            drow[y & 1][x] = diff
-        fresh_sample = False
-    out += enc.flush()
-    return bytes(out)
-
-
-def _reference_arith_lossless_scan(
-    buf, pos, precision, width, height, scan_comps, dc_cond,
-    restart_interval, predictor, pt, grids
-):
-    """The PRE-INLINE decoder pixel loop: one
-    :meth:`_QmDecoder.decode_diff` call per sample — the per-call
-    reference form the r12 inlined loop in ``_arith_lossless_scan``
-    must reproduce decision for decision (grids AND return value)."""
-    from carbon_clickhouse_spark.datapipe import multimodal as mm
-
-    default = 1 << (precision - pt - 1)
-    pred_fn = mm._LL_PREDICT[predictor]
-
-    def fresh():
-        stats = {t: bytearray(mm._QM_LL_BINS) for _, t in scan_comps}
-        diffs = {
-            cid: [[0] * width for _ in range(2)] for cid, _ in scan_comps
-        }
-        return stats, diffs
-
-    stats, dgrid = fresh()
-    dec = mm._QmDecoder(buf, pos)
-    fresh_sample = True
-    first_line = 0
-    rst = 0
-
-    def slots():
-        out = []
-        for cid, td in scan_comps:
-            _L, U = dc_cond.get(td, (0, 1))
-            out.append(((1 << U) >> 1, stats[td], dgrid[cid], grids[cid]))
-        return out
-
-    comp_slots = slots()
-    for m in range(width * height):
-        if restart_interval and m and m % restart_interval == 0:
-            mk = mm._arith_next_marker(buf, dec.bp)
-            if mk is None or buf[mk + 1] != 0xD0 + (rst & 7):
-                return None
-            rst += 1
-            stats, dgrid = fresh()
-            comp_slots = slots()
-            dec = mm._QmDecoder(buf, mk + 2)
-            fresh_sample = True
-            first_line = m // width
-        y, x = divmod(m, width)
-        for small, bins, drow, g in comp_slots:
-            da = drow[y & 1][x - 1] if x else 0
-            db = drow[(y - 1) & 1][x] if y else 0
-            cb = mm._ll_cat(db, small)
-            st = 4 * (5 * mm._ll_cat(da, small) + cb)
-            diff = dec.decode_diff(
-                bins, st,
-                mm._QM_LL_CHAIN_B if cb >= 3 else mm._QM_LL_CHAIN_A,
-            )
-            if diff is None:
-                return None
-            drow[y & 1][x] = diff
-            if fresh_sample:
-                px = default
-            elif y == first_line:
-                px = g[y][x - 1]
-            elif x == 0:
-                px = g[y - 1][0]
-            else:
-                px = pred_fn(g[y][x - 1], g[y - 1][x], g[y - 1][x - 1])
-            g[y][x] = (px + diff) & 0xFFFF
-        fresh_sample = False
-    return mm._skip_entropy(buf, dec.bp)
-
-
-def test_inlined_lossless_scan_loops_match_per_call_form():
-    """The r12 fully-inlined SOF11 scan loops (QM decision machine in
-    scan-loop locals) vs the per-call encode_diff/decode_diff
-    reference loops: entropy bytes identical, decoded grids identical,
-    scan return identical — across predictors, point transforms,
-    restart intervals, precisions and component counts."""
-    from carbon_clickhouse_spark.datapipe import multimodal as mm
-
-    rng = random.Random(977)
-    for trial in range(30):
-        ncomp = rng.choice((1, 2, 3))
-        h, w = rng.randrange(1, 10), rng.randrange(1, 10)
-        pred = rng.randrange(1, 8)
-        pt = rng.choice((0, 0, 1, 2))
-        ri = rng.choice((0, 0, 3, 5))
-        prec = rng.choice((8, 8, 12, 16))
-        planes = [
-            [
-                [rng.randrange(1 << prec) & ~((1 << pt) - 1) for _ in range(w)]
-                for _ in range(h)
-            ]
-            for _ in range(ncomp)
-        ]
-        payload = mm.encode_jpeg_arith_lossless(
-            planes, predictor=pred, pt=pt, precision=prec,
-            restart_interval=ri,
-        )
-        # 1. encoder: inlined entropy bytes == per-call reference bytes
-        coded = [
-            [[v >> pt for v in row] for row in plane] for plane in planes
-        ]
-        ref_entropy = _reference_arith_lossless_entropy(
-            coded, w, h, pred, pt, prec, ri
-        )
-        start = _sos_end(payload)
-        assert payload[start:-2] == ref_entropy, (trial, pred, pt, ri, prec)
-        # 2. decoder: inlined scan grids + return == per-call reference
-        scan_comps = [(c + 1, 0) for c in range(ncomp)]
-        g_new = {c + 1: [[0] * w for _ in range(h)] for c in range(ncomp)}
-        g_ref = {c + 1: [[0] * w for _ in range(h)] for c in range(ncomp)}
-        r_new = mm._arith_lossless_scan(
-            payload, start, prec, w, h, scan_comps, {0: (0, 1)}, ri,
-            pred, pt, g_new,
-        )
-        r_ref = _reference_arith_lossless_scan(
-            payload, start, prec, w, h, scan_comps, {0: (0, 1)}, ri,
-            pred, pt, g_ref,
-        )
-        assert r_new == r_ref and r_new is not None, (trial,)
-        assert g_new == g_ref, (trial, pred, pt, ri, prec)
-
-
-def _reference_jpeg_scan_mean(
-    buf, pos, comps, scan, huff, qt, width, height,
-    restart_interval, precision=8
-):
-    """The PRE-INLINE baseline/extended-sequential MCU loop: one
-    reader.huff()/reader.read() call per symbol — the per-call
-    reference form the r12 inlined loop in ``_jpeg_scan_mean`` must
-    reproduce decision for decision (including every failure path)."""
-    from carbon_clickhouse_spark.datapipe import multimodal as mm
-
-    by_id = {c[0]: c for c in comps}
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    luma_id = comps[0][0]
-    order = []
-    for cid, td, ta in scan:
-        comp = by_id.get(cid)
-        if comp is None or (0, td) not in huff or (1, ta) not in huff:
-            return None
-        if comp[3] not in qt:
-            return None
-        order.append(
-            (comp, huff[(0, td)], huff[(1, ta)], comp[1] * comp[2])
-        )
-    if len(scan) == 1:
-        comp = order[0][0]
-        if len(comps) == 1:
-            bw, bh = -(-width // 8), -(-height // 8)
-        else:
-            bw = -(-(width * comp[1]) // (8 * hmax))
-            bh = -(-(height * comp[2]) // (8 * vmax))
-        mcus = bw * bh
-        order[0] = (comp, order[0][1], order[0][2], 1)
-    else:
-        mcus = (-(-width // (8 * hmax))) * (-(-height // (8 * vmax)))
-    reader = mm._JpegBitReader(buf, pos)
-    preds = {c[0]: 0 for c in comps}
-    dc_sum = 0
-    dc_blocks = 0
-    for m in range(mcus):
-        if restart_interval and m and m % restart_interval == 0:
-            marker = reader.sync_marker()
-            if marker is None or not 0xD0 <= marker <= 0xD7:
-                return None
-            preds = {c[0]: 0 for c in comps}
-        for comp, dc_tab, ac_tab, nblocks in order:
-            for _ in range(nblocks):
-                s = reader.huff(dc_tab)
-                if s is None or s > 15:
-                    return None
-                mag = reader.read(s) if s else 0
-                if mag is None:
-                    return None
-                preds[comp[0]] += mm._jpeg_extend(mag, s)
-                if comp[0] == luma_id:
-                    dc_sum += preds[comp[0]]
-                    dc_blocks += 1
-                k = 1
-                while k < 64:
-                    rs = reader.huff(ac_tab)
-                    if rs is None:
-                        return None
-                    r, size = rs >> 4, rs & 15
-                    if size == 0:
-                        if r == 15:
-                            k += 16
-                            continue
-                        break
-                    k += r + 1
-                    if reader.read(size) is None:
-                        return None
-    if not dc_blocks:
-        return None
-    q0 = qt[comps[0][3]][0]
-    shift = (1 << (precision - 1)) * 8
-    num = dc_sum * q0 + shift * dc_blocks
-    den = 8 * dc_blocks
-    if precision != 8:
-        num *= 255
-        den *= (1 << precision) - 1
-    return width, height, (num, den)
-
-
-def _reference_encode_jpeg_gray_blocks(values, restart_interval=0):
-    """The PRE-INLINE fixture encoder entropy loop: three
-    ``w.put()`` calls per block — the per-call reference form the r12
-    inlined accumulator in ``encode_jpeg_gray_blocks`` must reproduce
-    byte for byte."""
-    from carbon_clickhouse_spark.datapipe import multimodal as mm
-
-    h = 8 * len(values)
-    dc_enc = mm._jpeg_huff_encode_table(*mm._JPEG_FIX_DC)
-    ac_enc = mm._jpeg_huff_encode_table(*mm._JPEG_FIX_AC)
-
-    def seg(marker, body):
-        return (
-            bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-        )
-
-    def dht(tc, bits, vals):
-        return bytes([tc << 4]) + bytes(bits) + bytes(vals)
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes([8] * 64))
-    out += seg(0xC0, struct.pack(">BHHB", 8, h, 8, 1) + bytes([1, 0x11, 0]))
-    out += seg(0xC4, dht(0, *mm._JPEG_FIX_DC))
-    out += seg(0xC4, dht(1, *mm._JPEG_FIX_AC))
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    w = mm._JpegBitWriter()
-    pred = 0
-    for i, v in enumerate(values):
-        if restart_interval and i and i % restart_interval == 0:
-            w.pad()
-            out += w.out
-            out += bytes([0xFF, 0xD0 + (i // restart_interval - 1) % 8])
-            w = mm._JpegBitWriter()
-            pred = 0
-        dcq = int(v) - 128
-        diff = dcq - pred
-        pred = dcq
-        s = abs(diff).bit_length()
-        w.put(*dc_enc[s])
-        if s:
-            w.put(diff if diff >= 0 else diff - 1, s)
-        w.put(*ac_enc[0x00])
-    w.pad()
-    out += w.out
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 def _craft_ac_payload(rng, nblocks, restart_interval=0):
@@ -678,41 +255,133 @@ def _craft_ac_payload(rng, nblocks, restart_interval=0):
     return bytes(out)
 
 
-def test_inlined_baseline_scan_and_writer_match_per_call_form():
-    """The r12 inlined baseline MCU loop (bit-reader registers in
-    scan-loop locals, LUT fast path inlined) and the inlined
-    gray-blocks bit writer vs their per-call reference forms: encoder
-    bytes identical; decode_image results identical across restart
-    intervals, AC-bearing streams, 12-bit frames, truncations and
-    byte flips."""
+# --- golden digests for the JPEG codec units ------------------------
+#
+# Each codec unit (bit reader, bit writer, QM encoder/decoder) exists
+# once and every scan loop calls it. These digests pin what the scan
+# loops built on those units produce over seeded corpora: encoder
+# bytes, decode_image outcomes (truncated and bit-flipped payloads
+# included, so every failure path is pinned too), and the SOF11 scan's
+# grids and return value. Any change in a decision, a byte or a
+# failure outcome moves a digest.
+
+
+def _digest(items) -> str:
+    h = hashlib.md5()
+    for it in items:
+        h.update(repr(it).encode())
+        h.update(b";")
+    return h.hexdigest()
+
+
+def _outcome(payload):
+    from carbon_clickhouse_spark.datapipe import multimodal as mm
+
+    try:
+        return mm.decode_image(payload)
+    except Exception as e:  # undecodable -> pin the failure
+        return ("raise", type(e).__name__)
+
+
+def _mutations(rng, payloads):
+    """A truncation (marker/EOF paths) and a single bit flip (invalid
+    prefixes) in the back half of each payload."""
+    out = []
+    for p in payloads:
+        out.append(p[: rng.randrange(len(p) // 2, len(p))])
+        flip = bytearray(p)
+        flip[rng.randrange(len(p) // 2, len(p))] ^= 1 << rng.randrange(8)
+        out.append(bytes(flip))
+    return out
+
+
+def _qm_diff_digest():
+    """encode_diff/decode_diff streams: bytes, returned chain MSBs,
+    decoded differences and the final statistics bins."""
+    from carbon_clickhouse_spark.datapipe import multimodal as mm
+
+    rng = random.Random(1234)
+    items = []
+    for _ in range(40):
+        diffs = [
+            rng.choice([0, 0, 1, -1, 2, -3, 7, -15, 100, -1000, 20000])
+            for _ in range(rng.randint(1, 200))
+        ]
+        sts = [4 * rng.randrange(25) for _ in diffs]
+        enc = mm._QmEncoder()
+        bins = bytearray(mm._QM_LL_BINS)
+        msbs = [
+            enc.encode_diff(bins, st, mm._QM_LL_CHAIN_A, d)
+            for d, st in zip(diffs, sts)
+        ]
+        stream = enc.flush()
+        dec = mm._QmDecoder(stream, 0)
+        dbins = bytearray(mm._QM_LL_BINS)
+        got = [
+            dec.decode_diff(dbins, st, mm._QM_LL_CHAIN_A) for st in sts
+        ]
+        assert got == diffs
+        items.append((stream, msbs, bytes(bins), bytes(dbins)))
+    return _digest(items)
+
+
+def _arith_lossless_digest():
+    """SOF11 encoder bytes, _arith_lossless_scan grids and return
+    value, and decode_image outcomes across predictors, point
+    transforms, restart intervals, precisions and component counts."""
+    from carbon_clickhouse_spark.datapipe import multimodal as mm
+
+    rng = random.Random(977)
+    items = []
+    payloads = []
+    for _ in range(30):
+        ncomp = rng.choice((1, 2, 3))
+        h, w = rng.randrange(1, 10), rng.randrange(1, 10)
+        pred = rng.randrange(1, 8)
+        pt = rng.choice((0, 0, 1, 2))
+        ri = rng.choice((0, 0, 3, 5))
+        prec = rng.choice((8, 8, 12, 16))
+        planes = [
+            [
+                [rng.randrange(1 << prec) & ~((1 << pt) - 1) for _ in range(w)]
+                for _ in range(h)
+            ]
+            for _ in range(ncomp)
+        ]
+        payload = mm.encode_jpeg_arith_lossless(
+            planes, predictor=pred, pt=pt, precision=prec,
+            restart_interval=ri,
+        )
+        grids = {c + 1: [[0] * w for _ in range(h)] for c in range(ncomp)}
+        ret = mm._arith_lossless_scan(
+            payload, _sos_end(payload), prec, w, h,
+            [(c + 1, 0) for c in range(ncomp)], {0: (0, 1)}, ri,
+            pred, pt, grids,
+        )
+        assert ret is not None
+        items.append((payload, ret, grids))
+        payloads.append(payload)
+    items += [_outcome(p) for p in payloads + _mutations(rng, payloads)]
+    return _digest(items)
+
+
+def _baseline_digest():
+    """Baseline/extended-sequential encoder bytes (0xFF stuffing and
+    restart intervals included) and decode_image outcomes over
+    DC-only, AC-bearing and 12-bit streams and their mutations."""
     from carbon_clickhouse_spark.datapipe import multimodal as mm
 
     rng = random.Random(431)
-
-    # 1. encoder: inlined accumulator == per-call w.put() bytes,
-    # including values that force 0xFF byte stuffing in the stream
+    items = []
     for trial in range(40):
         n = rng.randrange(1, 40)
         vals = [rng.randrange(256) for _ in range(n)]
         if trial % 3 == 0:  # long constant runs -> stuffed 0xFF bytes
             vals = [255] * n
         ri = rng.choice((0, 0, 1, 3, 5, 8))
-        assert mm.encode_jpeg_gray_blocks(
-            vals, restart_interval=ri
-        ) == _reference_encode_jpeg_gray_blocks(vals, restart_interval=ri), (
-            trial, ri,
-        )
-
-    # 2. decoder: swap _jpeg_scan_mean for the per-call reference and
-    # compare the full decode_image outcome on every payload shape
-    def outcome(payload):
-        try:
-            return mm.decode_image(payload)
-        except Exception as e:  # undecodable -> compare the failure
-            return ("raise", type(e).__name__)
-
+        items.append(mm.encode_jpeg_gray_blocks(vals, restart_interval=ri))
     payloads = []
-    for trial in range(30):
+    for _ in range(30):
         n = rng.randrange(1, 30)
         ri = rng.choice((0, 0, 2, 4, 7))
         vals = [rng.randrange(256) for _ in range(n)]
@@ -723,19 +392,69 @@ def test_inlined_baseline_scan_and_writer_match_per_call_form():
                 [rng.randrange(4096) for _ in range(n)], restart_interval=ri
             )
         )
-    mutated = []
-    for p in payloads:
-        cut = rng.randrange(len(p) // 2, len(p))
-        mutated.append(p[:cut])  # truncation: marker/EOF paths
-        flip = bytearray(p)
-        j = rng.randrange(len(p) // 2, len(p))
-        flip[j] ^= 1 << rng.randrange(8)  # bit flip: invalid prefixes
-        mutated.append(bytes(flip))
-    results_new = [outcome(p) for p in payloads + mutated]
-    orig = mm._jpeg_scan_mean
-    mm._jpeg_scan_mean = _reference_jpeg_scan_mean
-    try:
-        results_ref = [outcome(p) for p in payloads + mutated]
-    finally:
-        mm._jpeg_scan_mean = orig
-    assert results_new == results_ref
+    items += [_outcome(p) for p in payloads + _mutations(rng, payloads)]
+    return _digest(items)
+
+
+def _huffman_lossless_digest():
+    """SOF3 encoder bytes and decode_image outcomes (category 16,
+    restart first-line rule, mutations)."""
+    from carbon_clickhouse_spark.datapipe import multimodal as mm
+
+    rng = random.Random(3)
+    payloads = []
+    for _ in range(30):
+        ncomp = rng.choice((1, 2, 3))
+        h, w = rng.randrange(1, 10), rng.randrange(1, 10)
+        pt = rng.choice((0, 0, 1, 2))
+        prec = rng.choice((8, 8, 12, 16))
+        planes = [
+            [
+                [rng.randrange(1 << prec) & ~((1 << pt) - 1) for _ in range(w)]
+                for _ in range(h)
+            ]
+            for _ in range(ncomp)
+        ]
+        payloads.append(
+            mm.encode_jpeg_lossless(
+                planes, predictor=rng.randrange(1, 8), pt=pt, precision=prec,
+                restart_interval=rng.choice((0, 0, 3, 5)),
+            )
+        )
+    return _digest(
+        payloads + [_outcome(p) for p in payloads + _mutations(rng, payloads)]
+    )
+
+
+_CODEC_GOLDEN = {
+    "qm_diff": "8722c19a20544498bd84cb9896107144",
+    "arith_lossless": "98efe6d1eb90d48d2c888672c2721365",
+    "baseline": "2f3360bcc69f0bf8ba8d2d242208ee5f",
+    "huffman_lossless": "42bf7bb9f4389e805150ab1d2da6ed40",
+}
+
+
+# The three tests below keep the names of the equivalence suites they
+# replace. The library now holds only the per-call form of each codec
+# unit; the digests were captured from the hand-inlined scan loops it
+# replaced, so each test still checks that the per-call form produces
+# what the inlined form did.
+
+
+def test_fused_qm_diff_units_match_per_call_form():
+    """QM encode_diff/decode_diff streams, chain MSBs, decoded
+    differences and statistics bins."""
+    assert _qm_diff_digest() == _CODEC_GOLDEN["qm_diff"]
+
+
+def test_inlined_lossless_scan_loops_match_per_call_form():
+    """SOF11 and SOF3 encoder bytes, _arith_lossless_scan grids and
+    return value, and decode_image outcomes incl. mutations."""
+    assert _arith_lossless_digest() == _CODEC_GOLDEN["arith_lossless"]
+    assert _huffman_lossless_digest() == _CODEC_GOLDEN["huffman_lossless"]
+
+
+def test_inlined_baseline_scan_and_writer_match_per_call_form():
+    """Baseline encoder bytes and decode_image outcomes over DC-only,
+    AC-bearing and 12-bit streams and their mutations."""
+    assert _baseline_digest() == _CODEC_GOLDEN["baseline"]
