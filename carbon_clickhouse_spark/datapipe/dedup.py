@@ -17,6 +17,7 @@ over md5 hex is a valid uniform min-hash.
 
 from __future__ import annotations
 
+import inspect
 import logging
 
 from pyspark.sql import DataFrame, functions as F
@@ -315,20 +316,28 @@ def dedup_against_reference(
     parent's bucket table is exactly the per-side bucket table.
 
     The hashing parameters (``text_col``/``num_hashes``/``band_size``/
-    ``k``) describe how buckets are BUILT, so they are ignored for any
-    side whose buckets are supplied — passing both a bucket table and
-    non-default hashing params is a caller bug (the supplied buckets
-    were hashed under different parameters than requested) and raises
-    instead of silently returning wrong dup flags (ADVICE r12 #2).
+    ``k``) describe how buckets are BUILT. With ONE side's buckets
+    supplied they build the other side, so they must match the ones the
+    supplied table was hashed with. With BOTH supplied they are unused,
+    so passing any that differs from this function's defaults is a
+    caller bug (the tables were hashed under other parameters than
+    requested) and raises instead of silently returning wrong dup
+    flags.
     """
-    if (new_buckets is not None or ref_buckets is not None) and (
-        (text_col, num_hashes, band_size, k) != ("text", 8, 2, 3)
-    ):
-        raise ValueError(
-            "dedup_against_reference: hashing params are ignored when "
-            "precomputed buckets are supplied — build the bucket table "
-            "with those params instead of passing both"
-        )
+    if new_buckets is not None and ref_buckets is not None:
+        defaults = inspect.signature(dedup_against_reference).parameters
+        given = {
+            "text_col": text_col,
+            "num_hashes": num_hashes,
+            "band_size": band_size,
+            "k": k,
+        }
+        if any(v != defaults[p].default for p, v in given.items()):
+            raise ValueError(
+                "dedup_against_reference: hashing params are ignored when "
+                "both bucket tables are supplied — build the bucket tables "
+                "with those params instead of passing both"
+            )
     new_b = (
         new_buckets
         if new_buckets is not None

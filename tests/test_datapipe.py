@@ -123,9 +123,9 @@ def test_dedup_against_reference(spark):
         ).collect()
     }
     assert got4 == got
-    # guard (ADVICE r12 #2): supplying precomputed buckets together
-    # with non-default hashing params is a caller bug — the params
-    # describe how buckets are BUILT and would be silently ignored
+    # guard: supplying BOTH precomputed bucket tables
+    # together with non-default hashing params is a caller bug — the
+    # params describe how buckets are BUILT and would be silently ignored
     with pytest.raises(ValueError, match="hashing params are ignored"):
         dedup_against_reference(
             new,
@@ -134,6 +134,24 @@ def test_dedup_against_reference(spark):
             new_buckets=buckets.filter("doc_id >= 10"),
             ref_buckets=buckets.filter("doc_id < 10"),
         )
+    # ...but with only the reference side precomputed the params build
+    # the new side, so a reference table hashed with the same
+    # non-default params is a valid call: same flags as building both
+    # sides with those params
+    both4 = {
+        r["doc_id"]: r["dup"]
+        for r in dedup_against_reference(new, ref, num_hashes=4).collect()
+    }
+    ref4 = {
+        r["doc_id"]: r["dup"]
+        for r in dedup_against_reference(
+            new,
+            ref,
+            num_hashes=4,
+            ref_buckets=minhash_buckets(ref, num_hashes=4),
+        ).collect()
+    }
+    assert ref4 == both4 == got
 
 
 def test_ngram_jaccard(spark):
