@@ -1598,7 +1598,8 @@ def q_multimodal_features(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     # fused build+decode: one scan, one Arrow stage for all four
     # formats (the attach_*/extract_* operators remain the composition
-    # surface and are exercised in tests/test_multimodal_fuzz.py)
+    # surface: tests/test_datapipe.py drives the fake and PPM ones,
+    # tests/test_multimodal_fuzz.py the AVI one)
     return fixture_features(docs).select(
         "doc_id", "fmt", "width", "height",
         F.round("mean_byte", 4).alias("mean_byte"),

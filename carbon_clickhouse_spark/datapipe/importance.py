@@ -86,33 +86,6 @@ def ngram_buckets(
     )
 
 
-def bucket_distribution(
-    df: DataFrame,
-    n: int = 2,
-    num_buckets: int = 1 << 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    portable: bool = False,
-) -> DataFrame:
-    """Corpus-level smoothed bucket distribution ``(bucket, logp)``.
-    Add-one smoothing over every bucket (present or not) so the
-    log-ratio is defined everywhere; only OBSERVED buckets get a row
-    — consumers fold the constant unseen-bucket mass themselves."""
-    counts = (
-        ngram_buckets(df, n, num_buckets, text_col, id_col, portable)
-        .groupBy("bucket")
-        .agg(F.count("*").alias("cnt"))
-    )
-    total = counts.agg(
-        (F.sum("cnt") + F.lit(num_buckets)).alias("denom")
-    )
-    return counts.crossJoin(F.broadcast(total)).select(
-        "bucket",
-        F.log((F.col("cnt") + 1) / F.col("denom")).alias("logp"),
-        F.log(F.lit(1.0) / F.col("denom")).alias("logp_unseen"),
-    )
-
-
 def importance_log_ratios(
     target: DataFrame,
     source: DataFrame,

@@ -143,48 +143,6 @@ def attach_ppm_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select("doc_id", text_col).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-def attach_png_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Build REAL 8-bit grayscale PNGs deterministically from a text
-    table: width 8, height 1 + (utf8len(text) % 64), unfiltered pixel
-    bytes the cyclic 0..255 pattern, scanlines filter-type 0, IDAT via
-    ``zlib.compress`` (deterministic at a fixed level). Every decoded
-    feature has the same closed form over text length as the PPM
-    fixture (with n = 8*h gray bytes instead of 24*h RGB bytes), so a
-    SQL oracle checks the real chunk-walk + inflate + unfilter path
-    end-to-end."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for t in pdf[text_col]:
-                n_txt = len(t.encode("utf-8")) if t is not None else 0
-                h = 1 + (n_txt % 64)
-                n = 8 * h
-                body = (_PIX_CYCLE * (n // 256 + 1))[:n]
-                raw = b"".join(
-                    b"\x00" + body[r * 8 : (r + 1) * 8] for r in range(h)
-                )
-                ihdr = struct.pack(">IIBBBBB", 8, h, 8, 0, 0, 0, 0)
-                p = (
-                    _PNG_SIG
-                    + _png_chunk(b"IHDR", ihdr)
-                    + _png_chunk(b"IDAT", zlib.compress(raw, 6))
-                    + _png_chunk(b"IEND", b"")
-                )
-                payloads.append(p)
-                metas.append({"format": "png", "n_bytes": len(p)})
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": "image",
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
-    return df.select("doc_id", text_col).mapInPandas(gen, MEDIA_SCHEMA)
-
-
 def _parse_netpbm(payload: bytes) -> tuple[int, int, float] | None:
     """Binary netpbm (P5 gray / P6 RGB): parse the whitespace+comment
     header per the netpbm spec, return (width, height, mean of pixel
@@ -3291,35 +3249,6 @@ def attach_avi_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
                 {
                     "doc_id": pdf["doc_id"],
                     "media_type": "video",
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
-    return df.select("doc_id", text_col).mapInPandas(gen, MEDIA_SCHEMA)
-
-
-def attach_jpeg_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Build REAL baseline JPEGs deterministically from a text table:
-    width 8, height 8*(1 + utf8len(text) % 16), block i the constant
-    value (utf8len + 37*i) % 256 — so the decoded mean has a closed
-    form over the text length and a SQL oracle can check the real
-    entropy-decode path end-to-end."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for t in pdf[text_col]:
-                n_txt = len(t.encode("utf-8")) if t is not None else 0
-                hb = 1 + (n_txt % 16)
-                vals = [(n_txt + 37 * i) % 256 for i in range(hb)]
-                p = encode_jpeg_gray_blocks(vals)
-                payloads.append(p)
-                metas.append({"format": "jpeg", "n_bytes": len(p)})
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": "image",
                     "payload": payloads,
                     "meta": metas,
                 }

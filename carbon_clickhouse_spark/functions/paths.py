@@ -31,11 +31,6 @@ def normalize_double_dot(path: Column | str) -> Column:
     return F.when(col.contains(".."), F.regexp_replace(col, r"\.\.+", ".")).otherwise(col)
 
 
-def is_tagged(path: Column | str) -> Column:
-    """True when the path is canonical-tagged (contains ``?``)."""
-    return F.col(path).contains("?") if isinstance(path, str) else path.contains("?")
-
-
 def path_reverse(path: Column | str) -> Column:
     """Segment-wise reverse: ``a1.b2.c3`` -> ``c3.b2.a1``.
 

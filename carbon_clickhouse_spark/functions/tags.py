@@ -253,7 +253,3 @@ class TagConfig:
                 measurement = measurement[:-1]
             return measurement + "".join(f";{k}={v}" for k, v in tag_map.items())
         return ""
-
-
-def disabled_tag_config() -> TagConfig:
-    return TagConfig(enabled=False)

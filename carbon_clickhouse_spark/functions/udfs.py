@@ -1,11 +1,12 @@
 """Arrow-vectorized pandas UDF wrappers for the parity functions.
 
 Only the operations whose byte-exact semantics Spark built-ins cannot
-reproduce (Go-net/url escaping, tolerant unescape, tag canonicalization
-— SURVEY §2.2 P3/P5/P7) go through Python, and always as pandas UDFs
-(Arrow batches), never row-at-a-time UDFs. Callers should restrict
-these to the rows that need them (e.g. only lines containing ``;``) and
-to deduplicated path sets where possible.
+reproduce (tag canonicalization and tag parsing — SURVEY §2.2 P3/P5/P7)
+go through Python, and always as pandas UDFs (Arrow batches), never
+row-at-a-time UDFs. Callers should restrict these to the rows that
+need them (e.g. only lines containing ``;``) and to deduplicated path
+sets where possible. Go-net/url escaping and tolerant unescape are
+column expressions in ``functions.tags_jvm``.
 """
 
 from __future__ import annotations
@@ -14,7 +15,6 @@ import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .escape import escape_path, escape_query, unescape
 from .tags import TagConfig, graphite_canonicalize, parse_canonical_tags
 
 _TAGS_SCHEMA = T.StructType(
@@ -40,21 +40,6 @@ def _arrow_safe(x: str | None) -> str | None:
         return x
     except UnicodeEncodeError:
         return x.encode("utf-8", "surrogateescape").decode("utf-8", "replace")
-
-
-@pandas_udf(T.StringType())
-def escape_path_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: escape_path(x) if x is not None else None)
-
-
-@pandas_udf(T.StringType())
-def escape_query_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: escape_query(x) if x is not None else None)
-
-
-@pandas_udf(T.StringType())
-def unescape_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: _arrow_safe(unescape(x)) if x is not None else None)
 
 
 @pandas_udf(T.StringType())

@@ -3054,9 +3054,11 @@ def entropy_finals(
     SORT of the whole cell table — and unlike the bounded
     contingency/theils domains, the value domain here is unbounded,
     so the sort grows with distinct values at 100 TB. The total is
-    one tiny row per group, so it is now a second aggregate
-    broadcast-joined back (the exp_smoothing t_max-anchor idiom;
-    null-safe on the group key — a NULL group is its own group).
+    one row per group, so it is now a second aggregate joined back
+    (null-safe on the group key — a NULL group is its own group).
+    The join is not force-broadcast: the group key's cardinality is
+    the caller's, so AQE picks broadcast from the measured size. Only
+    the no-group total, exactly one row, is broadcast.
     ``p``, the per-term quantization and the exact sum are the same
     expressions over the same doubles — bit-identical results, zero
     Windows/Sorts in the plan."""
@@ -3070,7 +3072,7 @@ def entropy_finals(
         for i, c in enumerate(gcols):
             e = per_v[c].eqNullSafe(F.col(f"__g{i}"))
             cond = e if cond is None else (cond & e)
-        cells = per_v.join(F.broadcast(t), cond).drop(
+        cells = per_v.join(t, cond).drop(
             *[f"__g{i}" for i in range(len(gcols))]
         )
     else:

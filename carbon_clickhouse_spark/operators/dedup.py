@@ -74,8 +74,3 @@ def replacing_latest_window(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def dedup_within_batch(df: DataFrame, keys: list[str]) -> DataFrame:
-    """A1: per-batch dedup (ref ``newSeries`` maps in the uploaders)."""
-    return df.dropDuplicates(keys)

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -79,13 +79,6 @@ def drop_reason_flags(
         "pastDropped": ~future & past,
         "tooLongDropped": ~future & ~past & toolong,
     }
-
-
-def split_dropped(df: DataFrame, keep: Column) -> tuple[DataFrame, DataFrame]:
-    """(kept, dropped) pair — the dropped side feeds the audit table
-    (F5, ``receiver/base.go:88-127``'s ring buffer generalized to a
-    side-output table)."""
-    return df.filter(keep), df.filter(~keep)
 
 
 def glob_to_regex(pattern: str) -> str:

@@ -766,17 +766,6 @@ def start_grpc_ingest(
     return start_ingest(spark, files, config, decode)
 
 
-def socket_source(spark: SparkSession, host: str, port: int) -> DataFrame:
-    """Demo source (matches the reference's plain TCP): one line per
-    record. Not for production (no replay)."""
-    return (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-
-
 def start_otlp_ingest(
     spark: SparkSession, files: DataFrame, config: StreamConfig
 ) -> StreamingQuery:

@@ -1,100 +1,49 @@
-"""Plan audit: one-line physical-plan summary per driver query.
+"""Plan ledger: operator counts of every registered query's physical plan.
 
-Counts the operators that matter at scale — shuffles (Exchange),
-scans, broadcast joins vs other joins, Python (Arrow) stages,
-codegen coverage — so a plan regression (new shuffle, lost broadcast,
-accidental cartesian) is visible as a diff. Output: PLANS.md.
+Counts the operators that matter at scale — shuffles (Exchange), scans,
+broadcast vs shuffle joins, Python (Arrow) stages, generators, windows,
+sorts, cartesian products and row-at-a-time Python — for every
+``queries()`` + ``extra_queries()`` entry and the library pipelines,
+built at sf0.001 (pre-AQE-execution plans). ``tests/plan_ledger.json``
+holds the committed counts; ``tests/test_plan_discipline.py`` fails
+when one rises and asks for a rewrite when one falls.
+
+CPU-bound queries carry one fan-out Exchange from ``_fan()`` (the
+testdata parquet is one row group, so the scan cannot split it).
+Queries that ``localCheckpoint`` a subtree before a self-join show the
+post-checkpoint plan (``Scan ExistingRDD``), so their scan and Python
+counts exclude the one-time materialization.
+
+Usage: python tools/plan_audit.py    # rewrites tests/plan_ledger.json
 """
 
 from __future__ import annotations
 
+import itertools
+import json
+import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LEDGER = os.path.join(REPO, "tests", "plan_ledger.json")
+
+_COUNTERS = {
+    "exchanges": r"\bExchange\b",
+    "scans": r"\bFileScan|Scan parquet",
+    "bcast_joins": r"BroadcastHashJoin|BroadcastNestedLoop",
+    "shuffle_joins": r"SortMergeJoin|ShuffledHashJoin",
+    "python": r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas",
+    "generates": r"\bGenerate\b",
+    "windows": r"\bWindow\b",
+    "sorts": r"\bSort\b",
+    "cartesian": r"CartesianProduct",
+    "row_python": r"BatchEvalPython",
+}
 
 
 def summarize(plan: str) -> dict:
-    return {
-        "exchanges": len(re.findall(r"\bExchange\b", plan)),
-        "scans": len(re.findall(r"\bFileScan|Scan parquet", plan)),
-        "bcast_joins": len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoop", plan)),
-        "other_joins": len(re.findall(r"SortMergeJoin|ShuffledHashJoin", plan)),
-        "python": len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)),
-        "codegen": len(re.findall(r"WholeStageCodegen", plan)),
-        "generates": len(re.findall(r"\bGenerate\b", plan)),
-    }
-
-
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    import __spark_entry__ as entry
-    from carbon_clickhouse_spark.session import get_spark
-
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
-    rows = []
-    for name, fn in {**entry.queries(), **entry.extra_queries()}.items():
-        try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-            s = summarize(plan)
-            rows.append((name, s))
-        except Exception as e:  # noqa: BLE001
-            rows.append((name, {"error": str(e)[:80]}))
-
-    lines = [
-        "# PLANS — physical-plan audit (driver queries, pre-AQE-execution)",
-        "",
-        f"Generated by `tools/plan_audit.py` at `{sf_dir}`.",
-        "",
-        "CPU-bound queries (parse / Arrow stages) carry one scan",
-        "fan-out Exchange from `_fan()` — testdata parquet is",
-        "single-row-group, unsplittable by the scan; at production",
-        "scale the guard makes it a no-op. That Exchange is",
-        "parallelism restoration, not algorithmic shuffle.",
-        "",
-        "Queries that `localCheckpoint` an expensive subtree before a",
-        "self-join (minhash/simhash pair generators) show the",
-        "post-checkpoint plan: `Scan ExistingRDD`, so their scan /",
-        "python-stage counters exclude the one-time materialization",
-        "lineage (which runs ONCE — that is the optimization; the",
-        "r11 table double-counted it per join side).",
-        "",
-        "| query | exchanges | scans | bcast joins | shuffle joins | python stages | generate |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for name, s in rows:
-        if "error" in s:
-            lines.append(f"| {name} | ERROR: {s['error']} | | | | | |")
-        else:
-            lines.append(
-                f"| {name} | {s['exchanges']} | {s['scans']} | {s['bcast_joins']} | "
-                f"{s['other_joins']} | {s['python']} | {s['generates']} |"
-            )
-    # ungraded library pipelines whose plan shape matters at scale —
-    # audited with the same counters so regressions diff visibly
-    lines += [
-        "",
-        "## Library pipelines (ungraded, same counters)",
-        "",
-        "| pipeline | exchanges | scans | bcast joins | shuffle joins | python stages | generate |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for name, df in _library_pipelines(spark, sf_dir):
-        try:
-            s = summarize(
-                df._jdf.queryExecution().executedPlan().toString()
-            )
-            lines.append(
-                f"| {name} | {s['exchanges']} | {s['scans']} | {s['bcast_joins']} | "
-                f"{s['other_joins']} | {s['python']} | {s['generates']} |"
-            )
-        except Exception as e:  # noqa: BLE001
-            lines.append(f"| {name} | ERROR: {str(e)[:80]} | | | | | |")
-
-    out = "\n".join(lines) + "\n"
-    with open("PLANS.md", "w") as f:
-        f.write(out)
-    print(out)
+    return {k: len(re.findall(rx, plan)) for k, rx in _COUNTERS.items()}
 
 
 def _library_pipelines(spark, sf_dir: str):
@@ -111,6 +60,41 @@ def _library_pipelines(spark, sf_dir: str):
         "pack_token_ids",
         pack_token_ids(enc, seq_len=256, eos_id=len(model.vocab)),
     )
+
+
+def plans(spark) -> dict:
+    """name -> executed-plan string for every ledger name."""
+    import __spark_entry__ as entry
+
+    sf_dir = entry.SF_DEFAULT  # sf0.001
+    registry = {**entry.queries(), **entry.extra_queries()}
+    # lazy: each plan is taken before the next query is built
+    frames = itertools.chain(
+        ((name, fn(spark, sf_dir)) for name, fn in registry.items()),
+        _library_pipelines(spark, sf_dir),
+    )
+    return {
+        name: df._jdf.queryExecution().executedPlan().toString()
+        for name, df in frames
+    }
+
+
+def main() -> None:
+    sys.path.insert(0, REPO)
+    from carbon_clickhouse_spark.session import get_spark
+
+    # the session of tests/conftest.py, so the tool and the gate
+    # count the same plans (_fan() plans an Exchange by core count)
+    spark = get_spark(app_name="ccs-tests", master="local[4]", shuffle_partitions=8)
+    ledger = {n: summarize(p) for n, p in plans(spark).items()}
+    # one line per name, so a changed count is a one-line diff
+    rows = [
+        f"  {json.dumps(n)}: {json.dumps(ledger[n], sort_keys=True)}"
+        for n in sorted(ledger)
+    ]
+    with open(LEDGER, "w") as fh:
+        fh.write("{\n" + ",\n".join(rows) + "\n}\n")
+    print(f"wrote {len(ledger)} names to {LEDGER}")
 
 
 if __name__ == "__main__":
