@@ -214,6 +214,7 @@ def _time_stored(spark, sf_dir: str, repeats: int, timings, jobs) -> None:
     import __spark_entry__ as entry
     from carbon_clickhouse_spark.pipeline import IngestConfig, ingest_and_store
     from carbon_clickhouse_spark.query.finder import find_metrics, read_series
+    from carbon_clickhouse_spark.schemas import read_table
 
     sc = spark.sparkContext
     root = tempfile.mkdtemp(prefix="ccs_bench_")
@@ -233,8 +234,8 @@ def _time_stored(spark, sf_dir: str, repeats: int, timings, jobs) -> None:
             shutil.rmtree(os.path.join(root, f"w{i}"), ignore_errors=True)
         last = os.path.join(root, f"w{n - 1}")
 
-        stored_points = spark.read.parquet(f"{last}/points")
-        stored_index = spark.read.parquet(f"{last}/index")
+        stored_points = read_table(spark, last, "points")
+        stored_index = read_table(spark, last, "index")
         timings["stored_find_metrics"], jobs["stored_find_metrics"] = _time_leg(
             sc, lambda _: _noop(find_metrics(stored_index, "ev.u1*.*")), repeats
         )
@@ -274,6 +275,7 @@ def _stream_throughput(spark, sf_dir: str) -> int:
     import __spark_entry__ as entry_mod
     from carbon_clickhouse_spark import benchmeter
     from carbon_clickhouse_spark.pipeline import IngestConfig
+    from carbon_clickhouse_spark.schemas import read_table
     from carbon_clickhouse_spark.streaming.ingest import (
         StreamConfig,
         file_landing_source,
@@ -390,7 +392,7 @@ def _stream_throughput(spark, sf_dir: str) -> int:
                 )
         finally:
             q.stop()
-        written = spark.read.parquet(os.path.join(root, "points")).count()
+        written = read_table(spark, root, "points").count()
         expect = rounds * waves * n + n_warm
         if written != expect:
             raise RuntimeError(

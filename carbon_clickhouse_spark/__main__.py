@@ -218,21 +218,19 @@ def launch(
         # read_series(hot_rollup=) / streaming.analytics.serve_rollup.
         from pyspark.sql import types as T
 
+        from .schemas import CONTRACT
         from .streaming.analytics import continuous_rollup as _crollup
 
         points_path = os.path.join(tables, "points")
         os.makedirs(points_path, exist_ok=True)
-        pts_schema = T.StructType(
-            [
-                T.StructField("path", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-                T.StructField("time", T.LongType()),
-                T.StructField("date", T.DateType()),
-                T.StructField("version", T.LongType()),
-                T.StructField("month", T.StringType()),
-            ]
-        )
-        pts = spark.readStream.schema(pts_schema).parquet(points_path)
+        # a file stream fixes its schema at start (maybe on an empty
+        # dir): declare the month partition, typed as batch reads see it
+        pts = spark.readStream.schema(
+            T.StructType(
+                CONTRACT["points"].fields
+                + [T.StructField("month", T.IntegerType())]
+            )
+        ).parquet(points_path)
         tier_path = os.path.join(tables, "rollup_hot")
         os.makedirs(tier_path, exist_ok=True)
         # precision sidecar: rebuild_rollup_tier / --compact re-derive
@@ -289,59 +287,12 @@ def serve_api(root: str, spark, host: str = "127.0.0.1", port: int = 0):
     """Start the graphite-web query facade over a four-table root:
     /metrics/find resolves globs on the stored index, /render
     evaluates target expressions (query/api.py vocabulary) on the
-    stored points. Returns the started RenderApi (caller owns stop)."""
-    import os as _os
-
+    stored points, re-opened per request so appended rows are served.
+    Returns the started RenderApi (caller owns stop)."""
     from .query.api import GraphiteStore, RenderApi
 
-    index = spark.read.parquet(_os.path.join(root, "index"))
-    # keep the month partition column: read_series prunes partitions
-    # with it (it projects (path, time, value) at the end, so the
-    # extra column never reaches responses)
-    points = spark.read.parquet(_os.path.join(root, "points"))
-    tagged = None
-    tagged_path = _os.path.join(root, "tagged")
-    if _os.path.exists(tagged_path):
-        tagged = spark.read.parquet(tagged_path)
-    dropped = None
-    dropped_path = _os.path.join(root, "dropped")
-    if _os.path.exists(dropped_path):
-        dropped = spark.read.parquet(dropped_path)
-    from .query.events import EventsStore
-    from .streaming.exists_cache import ExistsCacheControl
-
-    events = EventsStore(spark, _os.path.join(root, "events"))
-    # the launcher keeps the SIGHUP epoch file one level above the
-    # tables root (<data>/exists_cache.epoch beside <data>/tables) —
-    # wire the same handle so /debug/upload/<t>/cache/ reflects resets
-    cache_ctl = ExistsCacheControl(
-        _os.path.normpath(
-            _os.path.join(root, _os.pardir, "exists_cache.epoch")
-        )
-    )
-    # continuous-rollup serving tier (when --continuous-rollup wrote
-    # one): maxDataPoints consolidation of plain-path targets then
-    # reads pre-aggregated buckets instead of re-averaging raw points
-    rollup_hot = None
-    rollup_precision = None
-    hot_path = _os.path.join(root, "rollup_hot")
-    if _os.path.isdir(hot_path):
-        from .streaming.analytics import tier_precision
-
-        rollup_precision = tier_precision(root)
-        if rollup_precision:
-            try:
-                rollup_hot = spark.read.parquet(hot_path)
-            except Exception:  # noqa: BLE001 — empty tier dir
-                rollup_hot = None
     return RenderApi(
-        GraphiteStore(
-            index, points, tagged=tagged, dropped=dropped, events=events,
-            cache_ctl=cache_ctl,
-            rollup_hot=rollup_hot, rollup_precision=rollup_precision,
-        ),
-        host=host,
-        port=port,
+        GraphiteStore.open(spark, root), host=host, port=port
     ).start()
 
 
@@ -707,6 +658,7 @@ def main(argv=None) -> int:
     if args.compact:
         from .operators.compaction import compact_replacing, compact_rollup
         from .operators.rollup import DEFAULT_RULES, rules_from_xml
+        from .schemas import REPLACING_KEYS, read_table
         from .session import get_spark
 
         spark = get_spark(
@@ -716,22 +668,17 @@ def main(argv=None) -> int:
         rules = (
             rules_from_xml(args.rollup_conf) if args.rollup_conf else DEFAULT_RULES
         )
-        for table, keys in (
-            ("index", ["date", "level", "path"]),
-            ("tagged", ["date", "tag1", "path"]),
-            ("tree", ["level", "path"]),
-            ("series", ["date", "level", "path"]),
-            ("series_reverse", ["date", "level", "path"]),
-        ):
-            path = os.path.join(args.compact, table)
-            if os.path.exists(path):
-                done = compact_replacing(spark, path, keys)
+        for table, keys in REPLACING_KEYS.items():
+            if read_table(spark, args.compact, table) is not None:
+                done = compact_replacing(
+                    spark, os.path.join(args.compact, table), keys
+                )
                 print(
                     f"compacted {table} (replacing dedup, "
                     f"{len(done)} month partition(s))",
                     flush=True,
                 )
-        if os.path.exists(os.path.join(args.compact, "rollup_hot")):
+        if read_table(spark, args.compact, "rollup_hot") is not None:
             # refresh the continuous-rollup serving tier from the
             # durable points BEFORE those points are physically
             # rolled up below (the tier must aggregate raw points);
@@ -745,8 +692,8 @@ def main(argv=None) -> int:
             )
             print(f"rebuilt rollup_hot ({n} buckets)", flush=True)
         for table in ("points", "points_reverse"):
-            path = os.path.join(args.compact, table)
-            if os.path.exists(path):
+            if read_table(spark, args.compact, table) is not None:
+                path = os.path.join(args.compact, table)
                 done = compact_rollup(spark, path, rules=rules, months=months)
                 print(
                     f"compacted {table} (rollup, "

@@ -654,7 +654,7 @@ def semantic_dedup(
         ]
     )
 
-    def prune(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def prune(key, pdf):
         pdf = pdf.sort_values("id")
         m = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
         m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)

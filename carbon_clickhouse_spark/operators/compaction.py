@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import replacing_latest
+from .layout import _fs_and_path
 from .rollup import DEFAULT_RULES, rollup
 
 
@@ -197,9 +198,7 @@ def _read_sidecar(table_path: str, name: str) -> dict | None:
 def _month_mtimes(spark: SparkSession, points_path: str) -> dict[str, int]:
     """{month: max file modification time (ms)} via the Hadoop FS API
     — storage-portable (mtimes exist on HDFS and object stores)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(points_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root = _fs_and_path(spark, points_path)
     out: dict[str, int] = {}
     for st in fs.listStatus(root):
         name = st.getPath().getName()
@@ -286,9 +285,7 @@ def _hadoop_delete(spark: SparkSession, path: str) -> None:
     """Recursive delete through the Hadoop FileSystem API — works on
     any supported filesystem (local, HDFS, object stores), unlike
     shutil."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _fs_and_path(spark, path)
     fs.delete(p, True)
 
 

@@ -21,6 +21,7 @@ from .operators.filters import drop_rule_predicate, ignored_patterns_predicate
 from .operators.index import build_index
 from .operators.tagged import build_tagged
 from .functions.paths import path_reverse
+from .schemas import REPLACING_KEYS, read_table
 
 
 @dataclass
@@ -94,11 +95,12 @@ def write_tables(
     """
     index_df, tagged_df = tables["index"], tables["tagged"]
     if existing_index is not None:
-        index_df = new_series_only(index_df, existing_index, ["date", "level", "path"])
+        index_df = new_series_only(index_df, existing_index, REPLACING_KEYS["index"])
     if existing_tagged is not None:
-        tagged_df = new_series_only(tagged_df, existing_tagged, ["date", "tag1", "path"])
+        tagged_df = new_series_only(tagged_df, existing_tagged, REPLACING_KEYS["tagged"])
 
     def _write_month_partitioned(name, df, *sort_cols):
+        from .operators.compaction import _hadoop_delete
         from .operators.layout import (
             forget_layout,
             prepare_partitioned_append,
@@ -108,17 +110,14 @@ def write_tables(
         path = os.path.join(root, name)
         spark = df.sparkSession
         # a PARTITIONED write of an EMPTY frame leaves a directory
-        # holding only _SUCCESS, which spark.read.parquet cannot infer
-        # a schema from — an empty table simply does not materialize
-        # (readers already treat a missing table dir as empty). With
+        # holding only _SUCCESS, which an inferring reader (compaction)
+        # cannot open — an empty table simply does not materialize
+        # (readers treat a missing table dir as empty). With
         # mode='overwrite' that must still TRUNCATE an existing table
         # (a kept previous state would turn the truncation into a lie)
         if not df.head(1):
             if mode == "overwrite" and table_layout(spark, path) != "missing":
-                fs = spark._jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-                    spark._jsc.hadoopConfiguration()
-                )
-                fs.delete(spark._jvm.org.apache.hadoop.fs.Path(path), True)
+                _hadoop_delete(spark, path)
             return
         # appending onto a pre-partitioning (flat) legacy table would
         # make the directory mixed and HIDE the flat rows from every
@@ -253,7 +252,7 @@ def ingest_and_store(
     # derived tables rebuild from the full stored points (bulk-load
     # semantics; idempotent w.r.t. the replacing-dedup read views)
 
-    stored = spark.read.parquet(os.path.join(root, "points")).drop("month")
+    stored = read_table(spark, root, "points").drop("month")
 
     def _write_reverse():
         (
@@ -269,14 +268,9 @@ def ingest_and_store(
 
     def _write_index():
         index_df = build_index(stored, disable_daily=config.disable_daily_index)
-        if exists_cache:
-            try:
-                existing = spark.read.parquet(os.path.join(root, "index"))
-                index_df = new_series_only(
-                    index_df, existing, ["date", "level", "path"]
-                )
-            except Exception:
-                pass
+        existing = read_table(spark, root, "index") if exists_cache else None
+        if existing is not None:
+            index_df = new_series_only(index_df, existing, REPLACING_KEYS["index"])
         index_df.sortWithinPartitions("path").write.mode(index_mode).parquet(
             os.path.join(root, "index")
         )
@@ -285,14 +279,9 @@ def ingest_and_store(
         tagged_df = build_tagged(
             stored, ignored_metrics=config.ignored_tagged_metrics
         )
-        if exists_cache:
-            try:
-                existing_t = spark.read.parquet(os.path.join(root, "tagged"))
-                tagged_df = new_series_only(
-                    tagged_df, existing_t, ["date", "tag1", "path"]
-                )
-            except Exception:
-                pass
+        existing = read_table(spark, root, "tagged") if exists_cache else None
+        if existing is not None:
+            tagged_df = new_series_only(tagged_df, existing, REPLACING_KEYS["tagged"])
         tagged_df.sortWithinPartitions("path").write.mode(index_mode).parquet(
             os.path.join(root, "tagged")
         )
@@ -385,10 +374,10 @@ def register_clickhouse_views(
     }
     registered = []
     for view, (table, cols) in specs.items():
-        path = os.path.join(root, table)
-        if not os.path.exists(path):
+        df = read_table(spark, root, table)
+        if df is None:
             continue
         name = (names or {}).get(view, view) + suffix
-        spark.read.parquet(path).selectExpr(*cols.split(", ")).createOrReplaceTempView(name)
+        df.selectExpr(*cols.split(", ")).createOrReplaceTempView(name)
         registered.append(name)
     return registered

@@ -483,6 +483,56 @@ class GraphiteStore:
         #: buckets from it instead of re-averaging raw points
         self.rollup_hot = rollup_hot
         self.rollup_precision = rollup_precision
+        self._source = None  # (spark, root) when opened from a root
+
+    #: the stored tables a root-backed store opens on first use
+    _TABLES = ("index", "points", "tagged", "dropped", "rollup_hot")
+
+    @classmethod
+    def open(cls, spark, root: str) -> "GraphiteStore":
+        """The store over a stored table root. Each table opens through
+        ``schemas.read_table`` on first use, so a request pays only for
+        the tables it reads; the exists-cache epoch file is the
+        launcher's, beside the root."""
+        import os
+
+        from ..streaming.analytics import tier_precision
+        from ..streaming.exists_cache import ExistsCacheControl
+        from .events import EventsStore
+
+        store = cls(
+            None,
+            None,
+            events=EventsStore(spark, os.path.join(root, "events")),
+            cache_ctl=ExistsCacheControl(
+                os.path.normpath(
+                    os.path.join(root, os.pardir, "exists_cache.epoch")
+                )
+            ),
+            rollup_precision=tier_precision(root),
+        )
+        for name in cls._TABLES:
+            delattr(store, name)
+        store._source = (spark, root)
+        return store
+
+    def __getattr__(self, name: str):
+        # reached only for a table a root-backed store has not opened yet
+        source = self.__dict__.get("_source")
+        if source is None or name not in self._TABLES:
+            raise AttributeError(name)
+        from ..schemas import read_table
+
+        df = None
+        if name != "rollup_hot" or self.rollup_precision:
+            df = read_table(*source, name)
+        setattr(self, name, df)
+        return df
+
+    def reopen(self) -> "GraphiteStore":
+        """The same root re-opened, so rows appended since are seen; a
+        store built from frames is returned as is."""
+        return self if self._source is None else self.open(*self._source)
 
     def series_consolidated(
         self, glob: str | list[str], t0: int, t1: int, step: int
@@ -578,15 +628,15 @@ class GraphiteStore:
         reference's DroppedHandler line shape (``receiver/base.go:88-
         110``): ``rcv:<now>\\tname:<path>\\ttimestamp:<t>\\tvalue:<v>``,
         sorted — its ring buffer (droppedListSize=1000) generalized to
-        the durable audit table. A table written before the protocol
-        column existed serves every front."""
+        the durable audit table. A row written before the protocol
+        column existed reads a null protocol and serves every front."""
         if self.dropped is None:
             return []
-        df = self.dropped
-        if "protocol" in df.columns:
-            df = df.filter(F.col("protocol") == protocol)
         rows = (
-            df.select("path", "value", "time", "version")
+            self.dropped.filter(
+                F.col("protocol").isNull() | (F.col("protocol") == protocol)
+            )
+            .select("path", "value", "time", "version")
             .orderBy(F.col("version").desc(), F.col("time").desc())
             .limit(limit)
             .collect()
@@ -1740,7 +1790,7 @@ class RenderApi:
         import http.server
         import urllib.parse
 
-        store = self.store
+        api = self
 
         class Handler(http.server.BaseHTTPRequestHandler):
             def log_message(self, *a):  # noqa: N802
@@ -1761,12 +1811,12 @@ class RenderApi:
                 if u.path in ("/events", "/events/"):
                     # graphite-web event submission: JSON body
                     # {what, tags, when?, data?}
-                    if store.events is None:
+                    if api.store.events is None:
                         self._json({"error": "no events store"}, 501)
                         return
                     try:
                         ev = json.loads(body or "{}")
-                        added = store.events.add(
+                        added = api.store.events.add(
                             ev["what"], tags=ev.get("tags"),
                             when=ev.get("when"), data=ev.get("data", ""),
                         )
@@ -1788,6 +1838,9 @@ class RenderApi:
 
             def _handle(self, u, q):
                 try:
+                    # one re-open per request: rows appended to a
+                    # served root since the start are answered too
+                    store = api.store.reopen()
                     mc = re.fullmatch(
                         r"/debug/upload/([A-Za-z0-9_+-]+)/cache/?", u.path
                     )

@@ -24,7 +24,8 @@ import time as _time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-_SCHEMA = "when long, what string, tags array<string>, data string"
+from ..schemas import CONTRACT, read_table
+
 _LOCK = threading.Lock()
 
 
@@ -50,16 +51,15 @@ class EventsStore:
         row = {"when": when, "what": str(what), "tags": tags or [],
                "data": str(data)}
         df = self.spark.createDataFrame(
-            [(row["when"], row["what"], row["tags"], row["data"])], _SCHEMA
+            [(row["when"], row["what"], row["tags"], row["data"])],
+            CONTRACT["events"],
         )
         with _LOCK:
             df.coalesce(1).write.mode("append").parquet(self.path)
         return row
 
     def df(self) -> DataFrame | None:
-        if not os.path.exists(self.path):
-            return None
-        return self.spark.read.parquet(self.path)
+        return read_table(self.spark, *os.path.split(self.path))
 
     def get(
         self,

@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from ..schemas import INDEX_SCHEMA, TAGGED_SCHEMA
 from ..sources.rowbinary import encode_points
 
 POINTS_COLUMNS = "(Path, Value, Time, Date, Timestamp)"
@@ -312,7 +313,7 @@ def insert_index(
         )
         _post_with_retries(send, url, body, gzip, retries, retry_delay_s)
 
-    df.select("date", "level", "path", "version").foreachPartition(upload)
+    df.select(*INDEX_SCHEMA.fieldNames()).foreachPartition(upload)
 
 
 def insert_tagged(
@@ -348,7 +349,7 @@ def insert_tagged(
         )
         _post_with_retries(send, url, body, gzip, retries, retry_delay_s)
 
-    df.select("date", "tag1", "path", "tags", "version").foreachPartition(upload)
+    df.select(*TAGGED_SCHEMA.fieldNames()).foreachPartition(upload)
 
 
 @dataclass

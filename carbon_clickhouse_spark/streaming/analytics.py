@@ -197,20 +197,15 @@ def rebuild_rollup_tier(
     import os
 
     from ..operators.compaction import _atomic_overwrite
+    from ..schemas import read_table
     from .ingest import _table_lock
 
     if precision_s is None:
         precision_s = tier_precision(root) or 60
-    pts_path = os.path.join(root, "points")
     tier_path = os.path.join(root, "rollup_hot")
-
-    def _tier():
-        try:
-            return spark.read.parquet(tier_path)
-        except Exception:  # noqa: BLE001 — no tier yet
-            return None
-
-    pts = spark.read.parquet(pts_path)
+    pts = read_table(spark, root, "points")
+    if pts is None:
+        return 0  # no points stored yet
     explicit_months = months is not None
     trackable = (
         "month" in pts.columns
@@ -242,7 +237,7 @@ def rebuild_rollup_tier(
             new_ver = None if row["mv"] is None else int(row["mv"])
 
     if up_to is None:
-        t = _tier()
+        t = read_table(spark, root, "rollup_hot")
         up_to = rollup_horizon(t, precision_s) if t is not None else None
     if up_to is None:
         row = pts.agg(F.max("time").alias("m")).collect()[0]
@@ -255,7 +250,7 @@ def rebuild_rollup_tier(
     try:
         n = rebuilt.count()  # materialize once; the write reuses it
         with _table_lock(tier_path):
-            t = _tier()
+            t = read_table(spark, root, "rollup_hot")
             if t is not None and months is not None and "month" in t.columns:
                 # incremental refresh of a month-partitioned tier:
                 # dynamic partition overwrite replaces ONLY the

@@ -32,6 +32,7 @@ progress event.
 
 from __future__ import annotations
 
+import logging
 import socket
 import threading
 import time
@@ -41,6 +42,8 @@ from pyspark.sql.streaming.listener import (
     QueryProgressEvent,
     StreamingQueryListener,
 )
+
+logger = logging.getLogger(__name__)
 
 #: receiver counter fields the reference recognises (base.go:129-153)
 RECEIVER_COUNTERS = (
@@ -92,10 +95,8 @@ class SelfMetricsCollector(StreamingQueryListener):
             if u.scheme in ("tcp", "udp") and u.hostname and u.port:
                 self.endpoint = endpoint
             else:
-                print(
-                    f"metric-endpoint parse error, using local: "
-                    f"{endpoint!r}",
-                    flush=True,
+                logger.warning(
+                    "metric-endpoint parse error, using local: %r", endpoint
                 )
         self._lock = threading.Lock()
         self._counters: dict[tuple[str, str], float] = {}  # reset on flush
@@ -278,8 +279,7 @@ class SelfMetricsCollector(StreamingQueryListener):
                     s.close()
             return True
         except OSError as e:
-            print(
-                f"metric-endpoint send failed ({e}); writing locally",
-                flush=True,
+            logger.warning(
+                "metric-endpoint send failed (%s); writing locally", e
             )
             return False

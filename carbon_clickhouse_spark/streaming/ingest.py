@@ -37,6 +37,7 @@ from ..pipeline import IngestConfig, derive_tables
 from ..operators.dedup import new_series_only
 from ..operators.layout import forget_layout, prepare_partitioned_append
 from ..operators.filters import drop_rule_predicate
+from ..schemas import REPLACING_KEYS, read_table
 from ..sources.plain import parse_plain_lines
 from ..functions.tags import TagConfig
 
@@ -225,28 +226,21 @@ def start_ingest(
 
             # one dates probe off the persisted batch, shared by both
             # anti-joins (was one collect per table), computed LAZILY
-            # inside the first index/tagged writer to reach it — the
+            # by the first anti-join against a stored table — the
             # points writes below start materializing the cached batch
-            # concurrently instead of idling behind the collect. None
-            # on the first batch (no stored table to anti-join
-            # against; the probe is a full pass over the batch).
+            # concurrently instead of idling behind the collect, and a
+            # first batch (nothing stored yet) skips it.
             dates_lock = threading.Lock()
             dates_memo: list = []
 
             def _batch_dates():
                 with dates_lock:
                     if not dates_memo:
-                        have_stored = any(
-                            _table_exists(spark_b, os.path.join(config.root, t))
-                            for t in ("index", "tagged")
-                        )
                         dates_memo.append(
                             [
                                 r["date"]
                                 for r in points.select("date").distinct().collect()
                             ]
-                            if have_stored
-                            else None
                         )
                     return dates_memo[0]
 
@@ -334,11 +328,11 @@ def start_ingest(
                         ),
                     )
 
-            def _write_series(name, keys):
+            def _write_series(name):
                 df = tables[name]
                 if config.exists_cache:
                     df = _anti_existing(
-                        spark_b, df, config.root, name, keys, _batch_dates()
+                        spark_b, df, config.root, name, _batch_dates
                     )
                 # legacy tree/series tables mirror to CH only when the
                 # config names a table for them (ch_names carries just
@@ -479,22 +473,14 @@ def start_ingest(
             # sync-ack semantics are unchanged)
             from concurrent.futures import ThreadPoolExecutor
 
-            series_keys = {
-                "index": ["date", "level", "path"],
-                "tagged": ["date", "tag1", "path"],
-                # legacy uploader types (uploader/uploader.go:48-60)
-                "tree": ["level", "path"],
-                "series": ["date", "level", "path"],
-                "series_reverse": ["date", "level", "path"],
-            }
             with ThreadPoolExecutor(max_workers=4) as pool:
                 futures = [
                     pool.submit(_write_points, "points"),
                     pool.submit(_write_points, "points_reverse"),
                 ] + [
-                    pool.submit(_write_series, name, series_keys[name])
+                    pool.submit(_write_series, name)
                     for name in tables
-                    if name in series_keys
+                    if name in REPLACING_KEYS
                 ]
                 for f in futures:
                     f.result()
@@ -518,29 +504,16 @@ def start_ingest(
     )
 
 
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe that works for any filesystem the session can
-    reach: one Hadoop ``FileSystem.exists`` RPC, no Spark job and no
-    log-spamming analysis exception (a ``spark.read.parquet`` probe on
-    a missing first-batch table dumps a WARN stack trace per miss)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
 def _anti_existing(
     spark: SparkSession,
     df: DataFrame,
     root: str,
     table: str,
-    keys: list[str],
-    batch_dates: list | None = None,
+    batch_dates,  # () -> the batch's distinct dates, memoized
 ) -> DataFrame:
-    path = os.path.join(root, table)
-    if not _table_exists(spark, path):
+    existing = read_table(spark, root, table)
+    if existing is None:
         return df  # first batch: table doesn't exist yet
-    existing = spark.read.parquet(path)
     # prune the stored side to the batch's dates before the anti-join:
     # a micro-batch covers one or two days, so the right side shrinks
     # from the whole index history to a sliver (at 100 TB this is the
@@ -549,11 +522,7 @@ def _anti_existing(
     if "date" in df.columns and "date" in existing.columns:
         from ..functions.dates import TREE_DATE
 
-        if batch_dates is None:
-            batch_dates = [
-                r["date"] for r in df.select("date").distinct().collect()
-            ]
-        batch_dates = list(batch_dates)
+        batch_dates = list(batch_dates())
         if TREE_DATE not in batch_dates:
             batch_dates.append(TREE_DATE)
         if "month" in existing.columns:
@@ -564,7 +533,7 @@ def _anti_existing(
             )
             existing = existing.filter(F.col("month").isin(months))
         existing = existing.filter(F.col("date").isin(batch_dates))
-    return new_series_only(df, existing, keys)
+    return new_series_only(df, existing, REPLACING_KEYS[table])
 
 
 def landing_backlog(landing_dir: str, checkpoint: str) -> int:

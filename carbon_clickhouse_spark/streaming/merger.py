@@ -62,6 +62,7 @@ from pyspark.sql import SparkSession
 
 from ..operators.compaction import compact_replacing, compact_rollup
 from ..operators.rollup import DEFAULT_RULES
+from ..schemas import REPLACING_KEYS, read_table
 
 
 class BackgroundMerger:
@@ -123,20 +124,14 @@ class BackgroundMerger:
         # of a month partition can't interleave with an append to it
         from .ingest import _table_lock
 
-        for table, keys in (
-            ("index", ["date", "level", "path"]),
-            ("tagged", ["date", "tag1", "path"]),
-            ("tree", ["level", "path"]),
-            ("series", ["date", "level", "path"]),
-            ("series_reverse", ["date", "level", "path"]),
-        ):
-            path = os.path.join(self.root, table)
-            if os.path.exists(path):
+        for table, keys in REPLACING_KEYS.items():
+            if read_table(spark, self.root, table) is not None:
+                path = os.path.join(self.root, table)
                 with _table_lock(path):
                     compact_replacing(spark, path, keys)
         for table in ("points", "points_reverse"):
-            path = os.path.join(self.root, table)
-            if os.path.exists(path):
+            if read_table(spark, self.root, table) is not None:
+                path = os.path.join(self.root, table)
                 with _table_lock(path):
                     compact_rollup(
                         spark, path, rules=self.rules,

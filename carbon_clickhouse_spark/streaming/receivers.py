@@ -29,6 +29,7 @@ partially-written chunk.
 
 from __future__ import annotations
 
+import logging
 import os
 import socket
 import socketserver
@@ -36,6 +37,8 @@ import struct
 import threading
 import time
 import uuid
+
+logger = logging.getLogger(__name__)
 
 
 class _ChunkWriter:
@@ -182,10 +185,9 @@ class PlainLineReceiver(_Ticker):
                 complete, tail = parts[:-1], parts[-1]
                 if tail and log_incomplete:
                     rx.incomplete_datagrams += 1
-                    print(
-                        f"udp: incomplete datagram tail dropped "
-                        f"({len(tail)} bytes)",
-                        flush=True,
+                    logger.warning(
+                        "udp: incomplete datagram tail dropped (%d bytes)",
+                        len(tail),
                     )
                 writer.add([ln.rstrip(b"\r") for ln in complete if ln])
 

@@ -218,6 +218,60 @@ def test_serve_api_over_stored_root(spark, tmp_path):
         api.stop()
 
 
+def test_serve_api_sees_rows_appended_after_start(spark, tmp_path):
+    """A served root answers as it is at each request: a series
+    appended with write_tables after serve_api started is found by
+    /metrics/find and rendered by /render (the reference's rows are
+    readable as soon as their upload lands)."""
+    from carbon_clickhouse_spark.__main__ import serve_api
+    from carbon_clickhouse_spark.pipeline import (
+        IngestConfig,
+        derive_tables,
+        write_tables,
+    )
+    from carbon_clickhouse_spark.sources.plain import parse_plain_lines
+
+    base = 1_625_478_000
+    root = str(tmp_path / "tables")
+
+    def append(lines):
+        df = spark.createDataFrame([(l,) for l in lines], ["line"])
+        write_tables(
+            derive_tables(parse_plain_lines(df, now=base), IngestConfig()),
+            root,
+        )
+
+    def get(path):
+        with urllib.request.urlopen(
+            f"http://127.0.0.1:{api.port}{path}"
+        ) as resp:
+            return json.loads(resp.read())
+
+    def rendered():
+        series = get(
+            f"/render?target=a.b.*&from={base - 1}&until={base + 600}"
+        )
+        return {
+            s["target"]: [v for v, _ in s["datapoints"] if v is not None]
+            for s in series
+        }
+
+    append([f"a.b.c 1 {base}", f"a.b.e 2 {base + 60}"])
+    api = serve_api(root, spark)
+    try:
+        assert rendered() == {"a.b.c": [1.0], "a.b.e": [2.0]}
+        append([f"a.b.d 3 {base + 120}"])
+        assert rendered() == {"a.b.c": [1.0], "a.b.d": [3.0], "a.b.e": [2.0]}
+        found = get("/metrics/find?query=a.b.*")
+        assert [(f["id"], f["leaf"]) for f in found] == [
+            ("a.b.c", 1), ("a.b.d", 1), ("a.b.e", 1),
+        ]
+        # the served store object stays the one opened at start
+        assert isinstance(api.store, GraphiteStore)
+    finally:
+        api.stop()
+
+
 @pytest.fixture(scope="module")
 def tagged_store(spark):
     from carbon_clickhouse_spark.pipeline import IngestConfig, derive_tables

@@ -679,6 +679,30 @@ def test_collector_bad_endpoint_degrades_to_local(spark, tmp_path):
     assert col.endpoint == ""  # parse fallback, like the reference
 
 
+def test_collector_endpoint_parse_error_is_logged(spark, tmp_path, caplog, capsys):
+    """The parse fallback is a library diagnostic: one WARNING on the
+    module's logger naming the endpoint, nothing on stdout."""
+    import logging
+
+    from carbon_clickhouse_spark.streaming import collector
+
+    with caplog.at_level(logging.WARNING, logger=collector.__name__):
+        collector.SelfMetricsCollector(
+            spark, str(tmp_path / "s"), endpoint="http://not-graphite"
+        )
+    assert [
+        (r.levelno, r.getMessage())
+        for r in caplog.records
+        if r.name == collector.__name__
+    ] == [
+        (
+            logging.WARNING,
+            "metric-endpoint parse error, using local: 'http://not-graphite'",
+        )
+    ]
+    assert "metric-endpoint" not in capsys.readouterr().out
+
+
 def test_streaming_writes_legacy_tables(spark, tmp_path):
     """StreamConfig whose IngestConfig names legacy uploader types
     writes tree/series tables per micro-batch, exists-cache deduped
