@@ -240,7 +240,7 @@ def launch(
         with open(os.path.join(tier_path, "_precision"), "w") as fh:
             fh.write(str(int(continuous_rollup)))
 
-        from .streaming.ingest import _table_lock
+        from .operators.layout import table_lock
 
         def _append_tier(batch, _bid):
             # foreachBatch plain append, NOT a streaming file sink: a
@@ -252,7 +252,7 @@ def launch(
             # dynamic-overwrite ONLY the months late points touched.
             from pyspark.sql import functions as F
 
-            with _table_lock(tier_path):
+            with table_lock(tier_path):
                 (
                     batch.withColumn(
                         "month",

@@ -16,11 +16,15 @@ scratch location, then rewrite ONLY the touched month partitions with
 Spark's dynamic partition overwrite — the ``replaceWhere`` equivalent
 without Delta. No whole-table directory rename (impossible on S3/GCS)
 and the table root never disappears; the commit granularity is one
-month partition. For the non-partitioned index/tagged tables the final
-step is a plain committed overwrite of the table files — readers can
-see the swap mid-commit there; at scale, prefer month-partitioned
-layouts (or a transactional table format) for anything compacted while
-being read.
+month partition. For a non-partitioned table the final step is a
+plain committed overwrite of the table files — readers can see the
+swap mid-commit there; at scale, prefer month-partitioned layouts (or
+a transactional table format) for anything compacted while being read.
+Since every engine table is written by ``layout.write_table``, only
+the date-less legacy ``tree`` table is flat; index/tagged are flat only
+in roots written by older builds — before round 7, or bulk-loaded by
+``pipeline.ingest_and_store``, which wrote them flat until it moved
+onto ``write_table`` — and the first append migrates those.
 """
 
 from __future__ import annotations

@@ -1,13 +1,24 @@
-"""Table directory layout probing and one-time flat->partitioned migration.
+"""The engine's one table writer, plus layout probing and the one-time
+flat->partitioned migration.
 
-Round 7 month-partitioned the index/tagged tables (mirroring the
-reference's ``PARTITION BY toYYYYMM(Date)`` DDL, e.g.
-``carbon-clickhouse.go`` docs / README index DDL). A table written by
-an OLDER build, though, is flat parquet — and Spark's parquet reader,
-pointed at a directory that mixes flat data files with ``month=``
-partition directories, silently returns ONLY the partitioned rows
-(partition discovery wins and the flat files are never listed). An
-unguarded partitioned append onto a legacy table therefore hides all
+The reference's uploaders write into tables declared ``PARTITION BY
+toYYYYMM(Date)`` (README index DDL); the engine mirrors that as
+``month=`` parquet partitions. :func:`write_table` is the only code
+that knows this layout: every date-carrying engine table (points,
+points_reverse, index, tagged and the legacy series tables) is
+appended through it, from the batch writer, the bulk loader, the
+streaming micro-batch and the self-metrics collector alike. A
+date-less frame (the legacy ``tree`` table) is written flat.
+
+Older builds wrote index/tagged as flat parquet — before round 7 every
+writer did, and the bulk loader (``pipeline.ingest_and_store``) kept
+doing so until the writers were folded into :func:`write_table` (the
+batch writer likewise wrote the legacy ``series`` tables flat while
+the stream partitioned them). Spark's parquet reader, pointed at a
+directory that mixes flat data files with ``month=`` partition
+directories, silently returns ONLY the partitioned rows (partition
+discovery wins and the flat files are never listed). An unguarded
+partitioned append onto a legacy table therefore hides all
 pre-upgrade history from every reader with no error.
 
 The guard here is the missing probe: before a partitioned append,
@@ -49,11 +60,14 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
+    "write_table",
+    "table_lock",
     "table_layout",
     "prepare_partitioned_append",
     "migrate_flat_to_partitioned",
@@ -72,6 +86,30 @@ _KNOWN_LOCK = threading.Lock()
 
 def _memo_key(path: str) -> str:
     return os.path.abspath(path) if "://" not in path else path
+
+
+# One writer at a time per TABLE DIRECTORY, process-wide: with several
+# protocol pipelines appending to the same four-table root (__main__
+# runs one StreamingQuery per enabled front, all feeding one root —
+# the reference's single writeChan, carbon/app.go:193), concurrent
+# append jobs to the SAME path race on the Hadoop committer's shared
+# `_temporary` staging dir — the first commit deletes the other job's
+# staged files, silently losing a batch. Different tables still write
+# in parallel; only same-table writes serialize. On a real cluster the
+# equivalent fix is a concurrency-safe committer (e.g. a manifest
+# committer / Delta's optimistic protocol); this lock is the
+# single-process guarantee.
+_TABLE_WRITE_LOCKS: dict[str, threading.Lock] = defaultdict(threading.Lock)
+_TABLE_WRITE_LOCKS_GUARD = threading.Lock()
+
+
+def table_lock(path: str) -> threading.Lock:
+    """The process-wide write lock of one table directory. Taken by
+    :func:`write_table`; maintenance rewrites (compaction, rollup-tier
+    refreshes) take it too so they never interleave with an append.
+    A plain ``Lock``: never hold it around a :func:`write_table` call."""
+    with _TABLE_WRITE_LOCKS_GUARD:
+        return _TABLE_WRITE_LOCKS[_memo_key(path)]
 
 
 def forget_layout(path: str) -> None:
@@ -139,9 +177,23 @@ def _flat_data_files(spark: SparkSession, path: str) -> list[str]:
     ]
 
 
-def migrate_flat_to_partitioned(
-    spark: SparkSession, path: str, sort_cols: tuple[str, ...] = ("path",)
-) -> bool:
+def _sort_cols(df: DataFrame) -> tuple[str, ...]:
+    # the table's primary key (the CH ORDER BY): rows sorted by it
+    # within each file let parquet min/max stats skip data
+    return ("path", "time") if "time" in df.columns else ("path",)
+
+
+def _write_partitioned(df: DataFrame, path: str, mode: str) -> None:
+    (
+        df.withColumn("month", F.date_format("date", "yyyyMM"))
+        .sortWithinPartitions("month", *_sort_cols(df))
+        .write.mode(mode)
+        .partitionBy("month")
+        .parquet(path)
+    )
+
+
+def migrate_flat_to_partitioned(spark: SparkSession, path: str) -> bool:
     """Fold a table's top-level flat parquet files into ``month=``
     partitions (month = ``yyyyMM`` of the ``date`` column, the same
     derivation every writer uses). Returns False — caller must write
@@ -157,14 +209,7 @@ def migrate_flat_to_partitioned(
     df = spark.read.parquet(*flat)
     if "date" not in df.columns:
         return False
-    cols = [c for c in sort_cols if c in df.columns]
-    (
-        df.withColumn("month", F.date_format("date", "yyyyMM"))
-        .sortWithinPartitions("month", *cols)
-        .write.mode("append")
-        .partitionBy("month")
-        .parquet(path)
-    )
+    _write_partitioned(df, path, "append")
     fs, _ = _fs_and_path(spark, path)
     jvm = spark._jvm
     for f in flat:
@@ -173,10 +218,7 @@ def migrate_flat_to_partitioned(
 
 
 def prepare_partitioned_append(
-    spark: SparkSession,
-    path: str,
-    sort_cols: tuple[str, ...] = ("path",),
-    pin: DataFrame | None = None,
+    spark: SparkSession, path: str, pin: DataFrame | None = None
 ) -> tuple[bool, DataFrame | None]:
     """Make ``path`` safe for a ``month=``-partitioned append.
 
@@ -214,7 +256,42 @@ def prepare_partitioned_append(
         else:
             if pin is not None:
                 pinned = pin.localCheckpoint(eager=True)
-            ok = migrate_flat_to_partitioned(spark, path, sort_cols)
+            ok = migrate_flat_to_partitioned(spark, path)
     with _KNOWN_LOCK:
         (_KNOWN_PARTITIONED if ok else _KNOWN_FLAT).add(key)
     return ok, pinned
+
+
+def write_table(df: DataFrame, path: str, mode: str = "append") -> DataFrame:
+    """Write one engine table: ``month=``-partitioned when the frame
+    carries ``date``, flat otherwise (the legacy ``tree`` table).
+
+    Holds :func:`table_lock` for the write. An append first runs
+    :func:`prepare_partitioned_append` with the frame as ``pin``, so a
+    legacy flat table is migrated (or, when date-less, matched flat)
+    instead of being hidden. A failed write drops the memoized layout
+    (the directory may be in any state) and re-raises.
+
+    Emptiness is the caller's: a partitioned write of an empty frame
+    leaves a ``_SUCCESS``-only directory. Returns the frame as written
+    — the pinned copy when a migration ran, whose lineage no longer
+    reads the files the migration deleted."""
+    partitioned = "date" in df.columns
+    with table_lock(path):
+        if partitioned and mode == "append":
+            partitioned, pinned = prepare_partitioned_append(
+                df.sparkSession, path, pin=df
+            )
+            if pinned is not None:
+                df = pinned
+        try:
+            if partitioned:
+                _write_partitioned(df, path, mode)
+            else:
+                df.sortWithinPartitions(*_sort_cols(df)).write.mode(mode).parquet(
+                    path
+                )
+        except Exception:
+            forget_layout(path)
+            raise
+    return df

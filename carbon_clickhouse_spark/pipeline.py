@@ -16,9 +16,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .operators.compaction import _hadoop_delete
 from .operators.dedup import new_series_only
 from .operators.filters import drop_rule_predicate, ignored_patterns_predicate
 from .operators.index import build_index
+from .operators.layout import table_layout, write_table
 from .operators.tagged import build_tagged
 from .functions.paths import path_reverse
 from .schemas import REPLACING_KEYS, read_table
@@ -85,30 +87,33 @@ def write_tables(
 ) -> None:
     """Persist the table set as month-partitioned parquet.
 
-    Layout (SURVEY §1.4): partition by ``month(date)`` mirroring
-    ClickHouse ``PARTITION BY toYYYYMM(Date)``; rows sorted within
-    partitions by ``(path, time)`` so parquet min/max stats provide
-    data skipping along the primary key, like the CH ORDER BY key.
+    Layout (SURVEY §1.4, written by ``operators.layout.write_table``):
+    partition by ``month(date)`` mirroring ClickHouse ``PARTITION BY
+    toYYYYMM(Date)``; rows sorted within partitions by ``(path, time)``
+    so parquet min/max stats provide data skipping along the primary
+    key, like the CH ORDER BY key. The date-less legacy ``tree`` table
+    is written flat.
 
     ``existing_index/tagged`` enable the A2 exists-cache: only series
     not already present are appended.
     """
-    index_df, tagged_df = tables["index"], tables["tagged"]
+    tables = dict(tables)
     if existing_index is not None:
-        index_df = new_series_only(index_df, existing_index, REPLACING_KEYS["index"])
+        tables["index"] = new_series_only(
+            tables["index"], existing_index, REPLACING_KEYS["index"]
+        )
     if existing_tagged is not None:
-        tagged_df = new_series_only(tagged_df, existing_tagged, REPLACING_KEYS["tagged"])
-
-    def _write_month_partitioned(name, df, *sort_cols):
-        from .operators.compaction import _hadoop_delete
-        from .operators.layout import (
-            forget_layout,
-            prepare_partitioned_append,
-            table_layout,
+        tables["tagged"] = new_series_only(
+            tables["tagged"], existing_tagged, REPLACING_KEYS["tagged"]
         )
 
+    # the four tables, then the legacy tree/series tables (index-shaped:
+    # series rows, no points) when the config derived them
+    for name in ("points", "points_reverse", *REPLACING_KEYS):
+        df = tables.get(name)
+        if df is None:
+            continue
         path = os.path.join(root, name)
-        spark = df.sparkSession
         # a PARTITIONED write of an EMPTY frame leaves a directory
         # holding only _SUCCESS, which an inferring reader (compaction)
         # cannot open — an empty table simply does not materialize
@@ -116,56 +121,11 @@ def write_tables(
         # mode='overwrite' that must still TRUNCATE an existing table
         # (a kept previous state would turn the truncation into a lie)
         if not df.head(1):
+            spark = df.sparkSession
             if mode == "overwrite" and table_layout(spark, path) != "missing":
                 _hadoop_delete(spark, path)
-            return
-        # appending onto a pre-partitioning (flat) legacy table would
-        # make the directory mixed and HIDE the flat rows from every
-        # reader — migrate once (or, for date-less legacy shapes,
-        # match the stored flat layout). `pin=df` because the frame's
-        # plan may read the very files being migrated (A2 anti-join)
-        if mode == "append":
-            ok, pinned = prepare_partitioned_append(
-                spark, path, sort_cols, pin=df
-            )
-            if pinned is not None:
-                df = pinned
-            if not ok:
-                df.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(
-                    path
-                )
-                return
-        try:
-            (
-                df.withColumn("month", F.date_format("date", "yyyyMM"))
-                .sortWithinPartitions("month", *sort_cols)
-                .write.mode(mode)
-                .partitionBy("month")
-                .parquet(path)
-            )
-        except Exception:
-            # a failed write may leave the dir in any state — drop
-            # the memoized layout so the next append re-probes
-            forget_layout(path)
-            raise
-
-    for name, df in (
-        ("points", tables["points"]),
-        ("points_reverse", tables["points_reverse"]),
-    ):
-        _write_month_partitioned(name, df, "path", "time")
-    # month(date) partitioning like the points tables — the
-    # reference's index/tagged DDL is PARTITION BY toYYYYMM(Date)
-    # too, and the A2 anti-join's date prune becomes structural
-    # partition pruning (tree rows all land in month(TREE_DATE))
-    for name, df in (("index", index_df), ("tagged", tagged_df)):
-        _write_month_partitioned(name, df, "path")
-    # legacy tree/series tables (index-shaped: series rows, no points)
-    for name in ("tree", "series", "series_reverse"):
-        if name in tables:
-            tables[name].sortWithinPartitions("path").write.mode(mode).parquet(
-                os.path.join(root, name)
-            )
+            continue
+        write_table(df, path, mode)
 
 
 def write_tables_bucketed(
@@ -214,7 +174,6 @@ def ingest_and_store(
     points: DataFrame,
     root: str,
     config: IngestConfig | None = None,
-    exists_cache: bool = False,
 ) -> None:
     """Bulk-load ingest order: write the points table ONCE, then
     derive reverse/index/tagged from the freshly stored parquet.
@@ -242,49 +201,31 @@ def ingest_and_store(
     kept = points.filter(keep).filter(
         ignored_patterns_predicate(config.ignored_patterns)
     )
-    (
-        kept.withColumn("month", F.date_format("date", "yyyyMM"))
-        .sortWithinPartitions("month", "path", "time")
-        .write.mode("append")
-        .partitionBy("month")
-        .parquet(os.path.join(root, "points"))
-    )
+    write_table(kept, os.path.join(root, "points"))
     # derived tables rebuild from the full stored points (bulk-load
     # semantics; idempotent w.r.t. the replacing-dedup read views)
 
     stored = read_table(spark, root, "points").drop("month")
-
-    def _write_reverse():
-        (
-            stored.withColumn("path", path_reverse("path"))
-            .withColumn("month", F.date_format("date", "yyyyMM"))
-            .sortWithinPartitions("month", "path", "time")
-            .write.mode("overwrite")
-            .partitionBy("month")
-            .parquet(os.path.join(root, "points_reverse"))
-        )
-
-    index_mode = "append" if exists_cache else "overwrite"
-
-    def _write_index():
-        index_df = build_index(stored, disable_daily=config.disable_daily_index)
-        existing = read_table(spark, root, "index") if exists_cache else None
-        if existing is not None:
-            index_df = new_series_only(index_df, existing, REPLACING_KEYS["index"])
-        index_df.sortWithinPartitions("path").write.mode(index_mode).parquet(
-            os.path.join(root, "index")
-        )
-
-    def _write_tagged():
-        tagged_df = build_tagged(
+    # builders, not frames: planning build_index/build_tagged is itself
+    # ~0.15 s of driver work each, which the pool overlaps with the
+    # other tables' writes
+    derived = {
+        "points_reverse": lambda: stored.withColumn("path", path_reverse("path")),
+        "index": lambda: build_index(stored, disable_daily=config.disable_daily_index),
+        "tagged": lambda: build_tagged(
             stored, ignored_metrics=config.ignored_tagged_metrics
-        )
-        existing = read_table(spark, root, "tagged") if exists_cache else None
-        if existing is not None:
-            tagged_df = new_series_only(tagged_df, existing, REPLACING_KEYS["tagged"])
-        tagged_df.sortWithinPartitions("path").write.mode(index_mode).parquet(
-            os.path.join(root, "tagged")
-        )
+        ),
+    }
+
+    def _write_derived(name):
+        path = os.path.join(root, name)
+        write_table(derived[name](), path, "overwrite")
+        # an empty derived table (say, no tagged series) does not
+        # materialize, as in write_tables: its partitioned write left
+        # a _SUCCESS-only directory an inferring reader cannot open.
+        # A listing, not an emptiness job
+        if table_layout(spark, path) == "missing":
+            _hadoop_delete(spark, path)
 
     # the three derived tables scan the same stored points independently
     # — submit them as concurrent jobs (Spark's scheduler interleaves
@@ -293,9 +234,7 @@ def ingest_and_store(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(fn) for fn in (_write_reverse, _write_index, _write_tagged)
-        ]
+        futures = [pool.submit(_write_derived, name) for name in derived]
         for f in futures:
             f.result()
 

@@ -198,7 +198,7 @@ def rebuild_rollup_tier(
 
     from ..operators.compaction import _atomic_overwrite
     from ..schemas import read_table
-    from .ingest import _table_lock
+    from ..operators.layout import table_lock
 
     if precision_s is None:
         precision_s = tier_precision(root) or 60
@@ -249,7 +249,7 @@ def rebuild_rollup_tier(
     month_of = F.date_format(F.timestamp_seconds(F.col("time")), "yyyyMM")
     try:
         n = rebuilt.count()  # materialize once; the write reuses it
-        with _table_lock(tier_path):
+        with table_lock(tier_path):
             t = read_table(spark, root, "rollup_hot")
             if t is not None and months is not None and "month" in t.columns:
                 # incremental refresh of a month-partitioned tier:

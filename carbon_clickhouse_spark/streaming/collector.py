@@ -231,29 +231,22 @@ class SelfMetricsCollector(StreamingQueryListener):
             return
         from pyspark.sql import functions as F
 
-        from .ingest import _table_lock
+        from ..operators.layout import write_table
 
         df = self.spark.createDataFrame(rows, "path string, value double, time long")
-        # same per-table lock as the micro-batch writers: two
-        # concurrent append jobs to one path race on the shared
-        # _temporary staging dir (the first commit deletes the other
-        # job's staged files) — a collector flush must not interleave
-        # with a points micro-batch commit
-        with _table_lock(self.points_path):
-            (
-                df.coalesce(1)
-                .select(
-                    "path",
-                    "value",
-                    "time",
-                    F.to_date(F.timestamp_seconds("time")).alias("date"),
-                    F.col("time").alias("version"),
-                )
-                .withColumn("month", F.date_format("date", "yyyyMM"))
-                .write.mode("append")
-                .partitionBy("month")
-                .parquet(self.points_path)
-            )
+        # the engine's table writer: it takes the same per-table lock
+        # as the micro-batch writers (a flush must not interleave with
+        # a points micro-batch commit) and guards a legacy flat table
+        write_table(
+            df.coalesce(1).select(
+                "path",
+                "value",
+                "time",
+                F.to_date(F.timestamp_seconds("time")).alias("date"),
+                F.col("time").alias("version"),
+            ),
+            self.points_path,
+        )
 
     def _send_remote(self, rows: list[tuple[str, float, int]]) -> bool:
         """Ship one flush as plain graphite lines to the tcp:// or

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import os
 import threading
-from collections import defaultdict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import IngestConfig, derive_tables
 from ..operators.dedup import new_series_only
-from ..operators.layout import forget_layout, prepare_partitioned_append
+from ..operators.layout import table_lock, write_table
 from ..operators.filters import drop_rule_predicate
 from ..schemas import REPLACING_KEYS, read_table
 from ..sources.plain import parse_plain_lines
@@ -75,26 +74,6 @@ def effective_chunk_interval(
         if backlog >= thresh:
             interval = seconds
     return interval
-
-
-# One writer at a time per TABLE DIRECTORY, process-wide: with several
-# protocol pipelines appending to the same four-table root (__main__
-# runs one StreamingQuery per enabled front, all feeding one root —
-# the reference's single writeChan, carbon/app.go:193), concurrent
-# append jobs to the SAME path race on the Hadoop committer's shared
-# `_temporary` staging dir — the first commit deletes the other job's
-# staged files, silently losing a batch. Different tables still write
-# in parallel; only same-table writes serialize. On a real cluster the
-# equivalent fix is a concurrency-safe committer (e.g. a manifest
-# committer / Delta's optimistic protocol); this lock is the
-# single-process guarantee.
-_TABLE_WRITE_LOCKS: dict[str, threading.Lock] = defaultdict(threading.Lock)
-_TABLE_WRITE_LOCKS_GUARD = threading.Lock()
-
-
-def _table_lock(path: str) -> threading.Lock:
-    with _TABLE_WRITE_LOCKS_GUARD:
-        return _TABLE_WRITE_LOCKS[os.path.abspath(path)]
 
 
 # series tables that have provably held rows this process (a prior
@@ -194,7 +173,7 @@ def start_ingest(
                     "protocol", F.lit(config.protocol)
                 )
                 dropped_path = os.path.join(config.root, "dropped")
-                with _table_lock(dropped_path):
+                with table_lock(dropped_path):
                     dropped.write.mode("append").parquet(dropped_path)
             kept_rows: int | None = None
             if config.collector is not None:
@@ -288,33 +267,7 @@ def start_ingest(
                 )
 
             def _write_points(name):
-                path = os.path.join(config.root, name)
-                with _table_lock(path):
-                    # same legacy-layout guard as the series tables:
-                    # a hand-built / pre-partitioning flat points dir
-                    # must be migrated before the first month= append
-                    # or its rows go dark (memoized one-RPC probe; no
-                    # pin needed — the points frame derives from the
-                    # batch, never from the stored table)
-                    if not prepare_partitioned_append(
-                        spark_b, path, ("path", "time")
-                    )[0]:
-                        tables[name].sortWithinPartitions(
-                            "path", "time"
-                        ).write.mode("append").parquet(path)
-                    else:
-                        try:
-                            (
-                                tables[name]
-                                .withColumn("month", F.date_format("date", "yyyyMM"))
-                                .sortWithinPartitions("month", "path", "time")
-                                .write.mode("append")
-                                .partitionBy("month")
-                                .parquet(path)
-                            )
-                        except Exception:
-                            forget_layout(path)
-                            raise
+                write_table(tables[name], os.path.join(config.root, name))
                 if ch is not None:
                     from ..sinks.clickhouse import insert_points
 
@@ -349,100 +302,38 @@ def start_ingest(
                 # is rewritten). Date-less legacy flat tables fall
                 # through to the probing path: an empty FLAT append
                 # would create one empty part file per task.
+                key = os.path.abspath(path)
                 if (
                     not mirror
                     and "date" in df.columns
-                    and os.path.abspath(path) in _ESTABLISHED_TABLES
+                    and key in _ESTABLISHED_TABLES
                 ):
-                    with _table_lock(path):
-                        partitioned_ok, pinned = (
-                            prepare_partitioned_append(
-                                spark_b, path, ("path",), pin=df
-                            )
-                        )
-                        if pinned is not None:
-                            df = pinned
-                        if partitioned_ok:
-                            try:
-                                (
-                                    df.withColumn(
-                                        "month",
-                                        F.date_format("date", "yyyyMM"),
-                                    )
-                                    .sortWithinPartitions("month", "path")
-                                    .write.mode("append")
-                                    .partitionBy("month")
-                                    .parquet(path)
-                                )
-                            except Exception:
-                                # unknown directory state: next batch
-                                # must re-probe layout AND emptiness
-                                forget_layout(path)
-                                _ESTABLISHED_TABLES.discard(
-                                    os.path.abspath(path)
-                                )
-                                raise
-                            return
-                    # legacy flat layout: probing path below
+                    try:
+                        write_table(df, path)
+                    except Exception:
+                        # unknown directory state: the next batch must
+                        # re-probe emptiness too
+                        _ESTABLISHED_TABLES.discard(key)
+                        raise
+                    return
                 # pin the deduped rows: reused by the emptiness probe,
                 # the parquet append, and (for mirrors) the CH upload
                 # — and re-evaluating the anti-join after the write
                 # would see the just-appended rows and go empty
-                df = df.persist()
+                persisted = df = df.persist()
                 try:
                     # a PARTITIONED append of an empty frame writes a
                     # directory holding only _SUCCESS — unreadable
                     # (UNABLE_TO_INFER_SCHEMA) — so an all-deduped
                     # batch writes nothing at all
-                    has_rows = bool(df.head(1))
-                    with _table_lock(path):
-                        # probe the stored layout first: a partitioned
-                        # append onto a legacy FLAT table would make
-                        # the directory mixed, and Spark then silently
-                        # drops the flat rows from every read —
-                        # migrate the legacy files into month=
-                        # partitions once (memoized after that).
-                        # `pin=df`: the anti-join above lazily reads
-                        # the very files the migration rewrites
-                        partitioned_ok = False
-                        if has_rows and "date" in df.columns:
-                            partitioned_ok, pinned = (
-                                prepare_partitioned_append(
-                                    spark_b, path, ("path",), pin=df
-                                )
-                            )
-                            if pinned is not None:
-                                df.unpersist()
-                                df = pinned
-                        if partitioned_ok:
-                            # month(date) partitioning, matching the
-                            # batch writer and the reference's
-                            # PARTITION BY toYYYYMM(Date) DDL — the A2
-                            # anti-join's date prune then partition-
-                            # prunes structurally (legacy `tree` has
-                            # no date and stays flat)
-                            try:
-                                (
-                                    df.withColumn(
-                                        "month",
-                                        F.date_format("date", "yyyyMM"),
-                                    )
-                                    .sortWithinPartitions("month", "path")
-                                    .write.mode("append")
-                                    .partitionBy("month")
-                                    .parquet(path)
-                                )
-                            except Exception:
-                                # a failed write leaves the dir in an
-                                # unknown state — re-probe next batch
-                                forget_layout(path)
-                                raise
-                        elif has_rows:
-                            df.write.mode("append").parquet(path)
-                    if has_rows:
+                    if df.head(1):
+                        # the frame as written: a migration of a
+                        # legacy flat table pins it, and the mirror
+                        # must not re-read the files it deleted
+                        df = write_table(df, path)
                         # the table now provably holds rows: later
                         # batches take the probe-free fast path above
-                        _ESTABLISHED_TABLES.add(os.path.abspath(path))
+                        _ESTABLISHED_TABLES.add(key)
                     if mirror:
                         # same deduped rows as the parquet write: the
                         # A2 exists-cache throttles the CH upload
@@ -465,7 +356,7 @@ def start_ingest(
                             ),
                         )
                 finally:
-                    df.unpersist()
+                    persisted.unpersist()
 
             # the four table writes share the persisted batch and are
             # independent jobs — run them concurrently (the micro-batch

@@ -23,7 +23,7 @@ byte-identical). A merge cycle with no observed months (``dates``
 never probed) falls back to all partitions, the explicit-CLI shape.
 
 Reader contract during a hot-month rewrite: in-process readers that
-take the same per-table lock (``ingest._table_lock``) see the
+take the same per-table lock (``operators.layout.table_lock``) see the
 partition at exactly its pre- or post-merge state. Lock-free readers
 of UNTOUCHED months are always complete and consistent; a lock-free
 reader racing the rewritten partition itself may hit a transient,
@@ -34,9 +34,10 @@ or mixed data. All three claims are pinned by
 ``tests/test_background_merger.py::test_multi_month_skew_merge_isolation``.
 
 Concurrency contract: the merge thread takes the same per-table
-commit locks as the micro-batch writers (``ingest._table_lock``), so
-an insert never interleaves with a partition rewrite — appends stall
-briefly behind the month being merged, which is exactly ClickHouse's
+commit locks as the micro-batch writers
+(``operators.layout.table_lock``), so an insert never interleaves
+with a partition rewrite — appends stall briefly behind the month
+being merged, which is exactly ClickHouse's
 insert-throttled-by-merges behavior. The micro-batch that FIRES the
 merge commits without waiting (background semantics); ``close()``
 joins the thread so shutdown is clean. At most one cycle runs at a
@@ -122,17 +123,17 @@ class BackgroundMerger:
     def _run_cycle(self, spark: SparkSession, months) -> None:
         # same lock objects the foreachBatch writers use: the rewrite
         # of a month partition can't interleave with an append to it
-        from .ingest import _table_lock
+        from ..operators.layout import table_lock
 
         for table, keys in REPLACING_KEYS.items():
             if read_table(spark, self.root, table) is not None:
                 path = os.path.join(self.root, table)
-                with _table_lock(path):
+                with table_lock(path):
                     compact_replacing(spark, path, keys)
         for table in ("points", "points_reverse"):
             if read_table(spark, self.root, table) is not None:
                 path = os.path.join(self.root, table)
-                with _table_lock(path):
+                with table_lock(path):
                     compact_rollup(
                         spark, path, rules=self.rules,
                         now=self.now, months=months,

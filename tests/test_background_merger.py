@@ -180,7 +180,7 @@ def test_multi_month_skew_merge_isolation(spark, tmp_path):
     idle_counts, hot_counts, errors = [], [], []
 
     def reader():
-        from carbon_clickhouse_spark.streaming.ingest import _table_lock
+        from carbon_clickhouse_spark.operators.layout import table_lock
 
         while not stop.is_set():
             try:
@@ -191,7 +191,7 @@ def test_multi_month_skew_merge_isolation(spark, tmp_path):
                 # consistent-read contract while a partition swaps
                 # (lock-free readers racing the rewrite may see a
                 # transient retryable FILE_NOT_EXIST, never stale data)
-                with _table_lock(pts_path):
+                with table_lock(pts_path):
                     hot_counts.append(
                         spark.read.parquet(pts_path)
                         .filter(F.col("month") == "202107")

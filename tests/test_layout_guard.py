@@ -1,20 +1,27 @@
 """Legacy flat-layout append guard (upgrade-path correctness).
 
 Pre-round-7 builds wrote index/tagged as FLAT parquet; round 7
-switched every date-carrying table to ``month=`` partitioning. Spark's
-parquet reader, given a directory mixing flat data files with
+switched the appending writers to ``month=`` partitioning, but the
+bulk loader (``pipeline.ingest_and_store``) still wrote index/tagged
+flat, and the batch writer the legacy ``series`` tables, until every
+engine table write moved into one writer, ``operators.layout.write_table``.
+Spark's parquet reader, given a directory mixing flat data files with
 partition directories, silently returns ONLY the partitioned rows —
 so an unguarded partitioned append onto a legacy table loses all
 pre-upgrade history from every read. These tests pin the guard:
 probe-and-migrate before the first partitioned append
-(``operators/layout.py``), in both the batch writer
-(``pipeline.write_tables``) and the streaming writer
-(``streaming/ingest.py``).
+(``operators/layout.py``), through every caller of the writer — the
+batch writer (``pipeline.write_tables``), the bulk loader, the
+streaming micro-batch (``streaming/ingest.py``) and the self-metrics
+collector flush — and that the bulk loader's tables are born
+partitioned.
 """
 
 import os
 import time
 
+import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from carbon_clickhouse_spark.operators import layout as layout_mod
@@ -22,8 +29,15 @@ from carbon_clickhouse_spark.operators.layout import (
     migrate_flat_to_partitioned,
     prepare_partitioned_append,
     table_layout,
+    write_table,
 )
-from carbon_clickhouse_spark.pipeline import IngestConfig, derive_tables, write_tables
+from carbon_clickhouse_spark.pipeline import (
+    IngestConfig,
+    derive_tables,
+    ingest_and_store,
+    write_tables,
+)
+from carbon_clickhouse_spark.schemas import read_table
 from carbon_clickhouse_spark.sources.plain import parse_plain_lines
 
 NOW1 = 1625478240
@@ -319,16 +333,152 @@ def test_missing_probe_invalidates_stale_memo(spark, tmp_path):
     }
 
 
-def test_failed_partitioned_write_invalidates_memo(spark, tmp_path):
-    """A failed partitioned append drops the memo entry via
-    forget_layout, so the next batch re-probes instead of trusting a
-    verdict the failed write may have invalidated."""
+def test_failed_partitioned_write_invalidates_memo(spark, tmp_path, monkeypatch):
+    """A failed write through write_table re-raises and drops the memo
+    entry via forget_layout, so the next batch re-probes instead of
+    trusting a verdict the failed write may have invalidated."""
     _reset_memo()
     path = str(tmp_path / "t")
+    key = os.path.abspath(path)
     with layout_mod._KNOWN_LOCK:
-        layout_mod._KNOWN_PARTITIONED.add(os.path.abspath(path))
-        layout_mod._KNOWN_FLAT.add(os.path.abspath(path))
-    layout_mod.forget_layout(path)
+        layout_mod._KNOWN_PARTITIONED.add(key)
+        layout_mod._KNOWN_FLAT.add(key)
+
+    def boom(self, *args, **kwargs):
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    df = spark.createDataFrame(
+        [("a.b", "2021-07-05")], "path string, date string"
+    ).withColumn("date", F.to_date("date"))
+    with pytest.raises(OSError, match="disk gone"):
+        write_table(df, path)
     with layout_mod._KNOWN_LOCK:
-        assert os.path.abspath(path) not in layout_mod._KNOWN_PARTITIONED
-        assert os.path.abspath(path) not in layout_mod._KNOWN_FLAT
+        assert key not in layout_mod._KNOWN_PARTITIONED
+        assert key not in layout_mod._KNOWN_FLAT
+
+
+def test_bulk_loaded_root_is_born_partitioned(spark, tmp_path, monkeypatch):
+    """ingest_and_store writes all four tables month-partitioned, so a
+    following exists-cache append runs no migration (the bulk loader
+    used to leave index/tagged flat, and the first append migrated)."""
+    _reset_memo()
+    root = str(tmp_path)
+    ingest_and_store(
+        _points(
+            spark,
+            ["bulk.host1.cpu 1.0 %d" % NOW1, "cpu;host=h1 2.0 %d" % NOW1],
+            now=NOW1,
+        ),
+        root,
+        IngestConfig(now=NOW1),
+    )
+    names = ("points", "points_reverse", "index", "tagged")
+    for name in names:
+        assert table_layout(spark, os.path.join(root, name)) == "partitioned", name
+
+    def no_migration(*args, **kwargs):
+        raise AssertionError("bulk-loaded root needed a migration")
+
+    monkeypatch.setattr(layout_mod, "migrate_flat_to_partitioned", no_migration)
+    write_tables(
+        derive_tables(
+            _points(
+                spark,
+                ["tail.host2.mem 3.0 %d" % NOW2, "mem;host=h2 4.0 %d" % NOW2],
+                now=NOW2,
+            ),
+            IngestConfig(now=NOW2),
+        ),
+        root,
+        existing_index=read_table(spark, root, "index"),
+        existing_tagged=read_table(spark, root, "tagged"),
+    )
+    for name in names:
+        assert table_layout(spark, os.path.join(root, name)) == "partitioned", name
+    index_paths = {r["path"] for r in read_table(spark, root, "index").collect()}
+    assert {"bulk.host1.cpu", "tail.host2.mem"} <= index_paths
+
+
+def test_bulk_load_without_tagged_series_stays_compactable(spark, tmp_path):
+    """A bulk load with no tagged series leaves no _SUCCESS-only
+    tagged directory (the partitioned write of an empty frame): every
+    table read_table opens can also be opened by compaction's
+    inferring reader."""
+    from carbon_clickhouse_spark.operators.compaction import compact_replacing
+    from carbon_clickhouse_spark.schemas import REPLACING_KEYS
+
+    _reset_memo()
+    root = str(tmp_path)
+    ingest_and_store(
+        _points(spark, ["plain.only.cpu 1.0 %d" % NOW1], now=NOW1),
+        root,
+        IngestConfig(now=NOW1),
+    )
+    for name in ("index", "tagged"):
+        if read_table(spark, root, name) is not None:
+            compact_replacing(spark, os.path.join(root, name), REPLACING_KEYS[name])
+    assert {r["path"] for r in read_table(spark, root, "index").collect()} >= {
+        "plain.only.cpu"
+    }
+
+
+def test_batch_series_append_onto_stream_partitioned_series(spark, tmp_path):
+    """The stream writes the legacy ``series`` table month-partitioned;
+    a write_tables append of the same table must keep that layout (it
+    used to append flat, leaving a mixed directory whose reads returned
+    only the old row)."""
+    _reset_memo()
+    root = str(tmp_path)
+    path = os.path.join(root, "series")
+    old = derive_tables(
+        _points(spark, ["old.s 1.0 %d" % NOW1], now=NOW1),
+        IngestConfig(now=NOW1, legacy_tables=("series",)),
+    )["series"]
+    # the streaming writer's layout for a date-carrying series table
+    old.withColumn("month", F.date_format("date", "yyyyMM")).write.partitionBy(
+        "month"
+    ).parquet(path)
+    assert table_layout(spark, path) == "partitioned"
+
+    write_tables(
+        derive_tables(
+            _points(spark, ["new.s 2.0 %d" % NOW2], now=NOW2),
+            IngestConfig(now=NOW2, legacy_tables=("series",)),
+        ),
+        root,
+    )
+    assert table_layout(spark, path) == "partitioned"
+    assert {r["path"] for r in read_table(spark, root, "series").collect()} == {
+        "old.s",
+        "new.s",
+    }
+
+
+def test_collector_flush_onto_legacy_flat_points(spark, tmp_path):
+    """A self-metrics collector's local flush is a points append like
+    any other: onto a legacy flat points table it migrates first, so
+    the flat history stays readable."""
+    from carbon_clickhouse_spark.streaming.collector import SelfMetricsCollector
+
+    _reset_memo()
+    root = str(tmp_path)
+    path = os.path.join(root, "points")
+    derive_tables(
+        _points(spark, ["legacy.flat.cpu 1.0 %d" % NOW1], now=NOW1),
+        IngestConfig(now=NOW1),
+    )["points"].write.parquet(path)
+    assert table_layout(spark, path) == "flat"
+
+    col = SelfMetricsCollector(
+        spark, path, prefix="carbon.agents.h", flush_every=1000,
+        flush_interval_s=9999,
+    )
+    col.add("metricsReceived", 3.0)
+    col.flush()
+
+    assert table_layout(spark, path) == "partitioned"
+    assert {r["path"] for r in read_table(spark, root, "points").collect()} == {
+        "legacy.flat.cpu",
+        "carbon.agents.h.tcp.metricsReceived",
+    }
