@@ -940,18 +940,6 @@ def q_render_rank(spark, sf_dir):
     )
 
 
-def q_highest_max(spark, sf_dir):
-    """Render layer: highestMax(5) — full series of the 5 paths with
-    the largest max value; distributed top-k + broadcast semi-join.
-    (Not in the graded 50 since round 4 — its top-k + semi-join shape
-    is covered by top_revenue_orders; the slot went to asof_align.
-    The operator stays unit-tested in tests/test_render.py.)"""
-    from carbon_clickhouse_spark.query.render import highest
-
-    pts = _events_points(spark, sf_dir).select("path", "time", "value")
-    return highest(pts, 5, "max")
-
-
 def q_asof_align(spark, sf_dir):
     """As-of join (operators/asof.py): align every non-view series
     point with the most recent 10-minute peak of the SAME user's view

@@ -32,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from . import render
-from .finder import find_metrics, read_series
+from .finder import match_metrics, read_series
 
 #: ceiling for render functions that expand per-series driver work
 #: (aliasQuery / useSeriesAbove / applyByNode): a glob matching 50k
@@ -661,22 +661,20 @@ class GraphiteStore:
                 & ~F.col("path").endswith(".")
             )
             .select("path")
-            .distinct()
             .collect()
         )
-        return sorted(r["path"] for r in rows)
+        return sorted({r["path"] for r in rows})
 
     def find(self, glob: str) -> list[tuple[str, bool]]:
         """[(path, is_leaf)] — trailing-dot index rows are branches."""
-        rows = find_metrics(self.index, glob).collect()
-        out = []
-        for r in rows:
+        out = set()
+        for r in match_metrics(self.index, glob).collect():
             p = r["path"]
             if p.endswith("."):
-                out.append((p[:-1], False))
+                out.add((p[:-1], False))
             else:
-                out.append((p, True))
-        return sorted(set(out))
+                out.add((p, True))
+        return sorted(out)
 
     @staticmethod
     def _suffix_heavy(glob: str) -> bool:
@@ -697,12 +695,10 @@ class GraphiteStore:
             # job per literal render target.
             paths = [glob]
         elif self._suffix_heavy(glob):
-            from .finder import find_metrics_reverse
+            from .finder import match_metrics_reverse
 
-            paths = sorted(
-                r["path"]
-                for r in find_metrics_reverse(self.index, glob).collect()
-            )
+            rows = match_metrics_reverse(self.index, glob).collect()
+            paths = sorted({r["path"] for r in rows})
         else:
             paths = [p for p, leaf in self.find(glob) if leaf]
         # graphite-web's 'until' is INCLUSIVE; read_series filters
@@ -728,9 +724,7 @@ class GraphiteStore:
         if self.tagged is None:
             raise ValueError("store has no tagged table")
         df = self._tagged_matching(terms)
-        return sorted(
-            r["path"] for r in df.select("path").distinct().collect()
-        )
+        return sorted({r["path"] for r in df.select("path").collect()})
 
     def _tagged_matching(self, terms: list[str]):
         """Tagged rows matching seriesByTag-grammar terms — the
@@ -804,14 +798,14 @@ class GraphiteStore:
                         ),
                     )
                 ).alias("k")
-            ).distinct()
+            )
         else:
             keys = self.tagged.select(
                 F.split_part(F.col("tag1"), F.lit("="), F.lit(1)).alias("k")
-            ).distinct()
+            )
         if prefix:
             keys = keys.filter(F.col("k").startswith(prefix))
-        out = sorted(r["k"] for r in keys.collect())
+        out = sorted({r["k"] for r in keys.collect()})
         return out[:limit] if limit else out
 
     def tag_values(
@@ -848,7 +842,7 @@ class GraphiteStore:
                             lambda x: x.isNotNull(),
                         )
                     ).alias("v")
-                ).distinct()
+                )
             )
         else:
             vals = (
@@ -858,11 +852,10 @@ class GraphiteStore:
                         F.col("tag1"), len(tag) + 2, 10_000
                     ).alias("v")
                 )
-                .distinct()
             )
         if prefix:
             vals = vals.filter(F.col("v").startswith(prefix))
-        out = sorted(r["v"] for r in vals.collect())
+        out = sorted({r["v"] for r in vals.collect()})
         return out[:limit] if limit else out
 
 
@@ -1777,6 +1770,46 @@ def _parse_time(v: str | None, default: int, now: int) -> int:
     return int(v)
 
 
+def _sorts_series(expr) -> bool:
+    """True when a ``sortBy*`` call appears anywhere in a parsed
+    target: its frame's row order is then the series order."""
+    return isinstance(expr, Call) and (
+        expr.name.startswith("sortBy")
+        or any(_sorts_series(a) for a in expr.args)
+    )
+
+
+def _series_list(rows, split: bool, ordered: bool) -> list[dict]:
+    """Collected ``(path, time, value[, __series])`` rows -> the
+    /render series list, each series' points in time order.
+
+    ``ordered`` keeps the series in the order the rows came (the
+    sortBy* family's frame order). Otherwise the series go in name
+    order, sorted here on the driver rather than by a Spark sort of
+    the points: Python's ``str`` order is Spark's UTF-8 binary order,
+    and a null sorts first as it does in Spark. ``split`` (a
+    ``__series`` column, areaBetween) keeps same-named series as
+    SEPARATE targets, the way upstream emits its renamed pair; those
+    go in order of their first timestamp, then of their ``__series``.
+    """
+    by_key: dict = {}
+    for r in rows:
+        k = (r["path"], r["__series"]) if split else (r["path"],)
+        by_key.setdefault(k, []).append([r["value"], r["time"]])
+    for pts in by_key.values():
+        pts.sort(key=lambda p: p[1])
+    keys = list(by_key)
+    if not ordered:
+
+        def order(k):
+            path, *series = k
+            first = (by_key[k][0][1],) if split else ()
+            return [(v is not None, v) for v in (path, *first, *series)]
+
+        keys.sort(key=order)
+    return [{"target": k[0], "datapoints": by_key[k]} for k in keys]
+
+
 class RenderApi:
     """Threaded HTTP front serving the two graphite-web endpoints."""
 
@@ -2107,36 +2140,13 @@ class RenderApi:
                                             .groupBy("path", "time")
                                             .agg(cons("value").alias("value"))
                                         )
-                            # keep the frame's own row order so the
-                            # sortBy* family orders the series list;
-                            # unordered frames fall back to name order
-                            ordered = "sortBy" in target
-                            rows = (
-                                df.collect()
-                                if ordered
-                                else df.orderBy("path", "time").collect()
+                            series.extend(
+                                _series_list(
+                                    df.collect(),
+                                    split="__series" in df.columns,
+                                    ordered=_sorts_series(parsed),
+                                )
                             )
-                            # a __series column (areaBetween) keeps
-                            # same-named series as SEPARATE targets,
-                            # the way upstream emits its renamed pair
-                            split = "__series" in df.columns
-                            by_path: dict = {}
-                            names: dict = {}
-                            for r in rows:
-                                k = (
-                                    (r["path"], r["__series"])
-                                    if split
-                                    else r["path"]
-                                )
-                                names[k] = r["path"]
-                                by_path.setdefault(k, []).append(
-                                    [r["value"], r["time"]]
-                                )
-                            for k, pts in by_path.items():
-                                pts.sort(key=lambda p: p[1])
-                                series.append(
-                                    {"target": names[k], "datapoints": pts}
-                                )
                         fmt = q.get("format", ["json"])[0]
                         if fmt == "json":
                             self._json(series)

@@ -55,9 +55,11 @@ def glob_to_regex(glob: str) -> str:
     return "^" + "".join(out) + "$"
 
 
-def find_metrics(index: DataFrame, glob: str, tree: bool = True) -> DataFrame:
-    """Resolve a Graphite glob against the index table -> distinct
-    ``path`` rows (trailing-dot rows mean "directory").
+def match_metrics(index: DataFrame, glob: str, tree: bool = True) -> DataFrame:
+    """Resolve a Graphite glob against the index table -> ``path``
+    rows, one per matching index row (trailing-dot rows mean
+    "directory"). Not deduplicated: a caller that collects the result
+    dedups on the driver, which costs no shuffle.
 
     Uses the tree rows (date-independent) by default; pass
     ``tree=False`` to search the daily rows (then filter date
@@ -77,17 +79,25 @@ def find_metrics(index: DataFrame, glob: str, tree: bool = True) -> DataFrame:
     )
     if prefix:
         df = df.filter(F.col("path").startswith(prefix))
-    return df.select("path").distinct()
+    return df.select("path")
 
 
-def find_metrics_reverse(index: DataFrame, glob: str, tree: bool = True) -> DataFrame:
+def find_metrics(index: DataFrame, glob: str, tree: bool = True) -> DataFrame:
+    """:func:`match_metrics` as distinct ``path`` rows."""
+    return match_metrics(index, glob, tree).distinct()
+
+
+def match_metrics_reverse(
+    index: DataFrame, glob: str, tree: bool = True
+) -> DataFrame:
     """Resolve a suffix-heavy glob (``*.cpu.loadavg``) against the
     REVERSE index rows (levels +10000/+30000): reverse the glob's
     segments, scan the reversed paths — turning a full-scan suffix
     match into a prefix scan, exactly why the reference maintains
     ``graphite_reverse`` (``uploader/points.go:21-31``).
 
-    Returns the matching paths in their ORIGINAL (un-reversed) form.
+    Returns the matching paths in their ORIGINAL (un-reversed) form,
+    one per matching index row, like :func:`match_metrics`.
     """
     from ..functions.paths import path_reverse
     from ..schemas import REVERSE_LEVEL_OFFSET, REVERSE_TREE_LEVEL_OFFSET
@@ -104,7 +114,12 @@ def find_metrics_reverse(index: DataFrame, glob: str, tree: bool = True) -> Data
     )
     if prefix:
         df = df.filter(F.col("path").startswith(prefix))
-    return df.select(path_reverse("path").alias("path")).distinct()
+    return df.select(path_reverse("path").alias("path"))
+
+
+def find_metrics_reverse(index: DataFrame, glob: str, tree: bool = True) -> DataFrame:
+    """:func:`match_metrics_reverse` as distinct ``path`` rows."""
+    return match_metrics_reverse(index, glob, tree).distinct()
 
 
 def find_tagged(

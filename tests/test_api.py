@@ -5,6 +5,7 @@ endpoints over a real four-table root."""
 import json
 import urllib.error
 import urllib.request
+from urllib.parse import quote
 from datetime import date as dt_date
 
 import pytest
@@ -1116,3 +1117,205 @@ def test_render_area_between_two_targets(store):
         assert lens[0] == lens[1]  # one series each, not interleaved
     finally:
         api.stop()
+
+
+_TWICE_BASE = 1_625_478_000
+
+
+@pytest.fixture(scope="module")
+def twice_root(spark, tmp_path_factory):
+    """A stored root holding every series twice: two uncompacted
+    write_tables appends, neither given an exists cache, so the index
+    and tagged tables carry each series' rows twice (points at
+    different times). Plain series ``srv.sortBy.sNN`` and
+    ``srv.plain.m``, tagged ``req;dc=dc1;host=hN``."""
+    from carbon_clickhouse_spark.pipeline import (
+        IngestConfig,
+        derive_tables,
+        write_tables,
+    )
+    from carbon_clickhouse_spark.sources.plain import parse_plain_lines
+
+    base = _TWICE_BASE
+    root = str(tmp_path_factory.mktemp("twice") / "tables")
+    for part in (0, 1):
+        lines = [
+            f"srv.sortBy.s{i:02d} {i * 10 + j} {base + 60 * (4 * part + j)}"
+            for i in range(12)
+            for j in range(4)
+        ] + [
+            f"srv.plain.m {j} {base + 60 * (4 * part + j)}" for j in range(4)
+        ] + [
+            f"req;dc=dc1;host=h{h} {h + j} {base + 60 * (4 * part + j)}"
+            for h in range(3)
+            for j in range(4)
+        ]
+        df = spark.createDataFrame([(l,) for l in lines], ["line"])
+        write_tables(
+            derive_tables(parse_plain_lines(df, now=base), IngestConfig()),
+            root,
+        )
+    return root
+
+
+def _get_json(api, path):
+    with urllib.request.urlopen(f"http://127.0.0.1:{api.port}{path}") as r:
+        return json.loads(r.read())
+
+
+def _ungrouped_job_ids(spark) -> list[int]:
+    """Ids of the Spark jobs run outside any job group, read through
+    the status store. A /render handler thread runs outside any
+    group; a streaming query runs its batches in its own group."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+
+
+def test_resolvers_list_a_twice_written_series_once(spark, twice_root):
+    """find, find_series, tag_values, tag_names and all_metrics
+    deduplicate on the driver: a series whose index and tagged rows
+    were written twice is listed once."""
+    store = GraphiteStore.open(spark, twice_root)
+    names = [f"srv.sortBy.s{i:02d}" for i in range(12)]
+    assert store.find("srv.sortBy.*") == [(n, True) for n in names]
+    assert store.find("srv.*") == [
+        ("srv.plain", False), ("srv.sortBy", False),
+    ]
+    tagged = [f"req?dc=dc1&host=h{h}" for h in range(3)]
+    assert store.find_series(["dc=dc1"]) == tagged
+    assert store.tag_values("host") == ["h0", "h1", "h2"]
+    assert store.tag_values("host", exprs=["dc=dc1"]) == ["h0", "h1", "h2"]
+    assert store.tag_names() == ["__name__", "dc", "host"]
+    assert store.tag_names(exprs=["dc=dc1"]) == ["__name__", "dc", "host"]
+    assert store.all_metrics() == ["srv.plain.m"] + names
+    # the suffix-heavy glob resolves through the reverse index rows
+    assert sorted(
+        {r.path for r in store.series("*.sortBy.s03", 0, 2**31).collect()}
+    ) == ["srv.sortBy.s03"]
+
+
+def test_render_series_in_name_order_unless_sorted_by_a_call(
+    spark, twice_root
+):
+    """/render lists series in name order, the order an
+    orderBy("path", "time") of the evaluated frame gives, unless a
+    sortBy* CALL orders them: 'sortBy' inside a metric name must not
+    keep the frame's own (shuffled) row order."""
+    from carbon_clickhouse_spark.__main__ import serve_api
+
+    t0, t1 = _TWICE_BASE - 1, _TWICE_BASE + 600
+    store = GraphiteStore.open(spark, twice_root)
+    api = serve_api(twice_root, spark)
+    try:
+        for target in (
+            "srv.sortBy.*",
+            "movingAverage(srv.sortBy.*, 2)",
+            "seriesByTag('dc=dc1')",
+        ):
+            frame = evaluate_target(parse_target(target), store, t0, t1)
+            want = [
+                r.path
+                for r in frame.select("path")
+                .distinct()
+                .orderBy("path")
+                .collect()
+            ]
+            got = _get_json(
+                api, f"/render?target={quote(target)}&from={t0}&until={t1}"
+            )
+            assert [s["target"] for s in got] == want, target
+            for s in got:
+                times = [t for _v, t in s["datapoints"]]
+                assert times == sorted(times)
+        # a real sortBy call keeps the frame's order: largest total first
+        got = _get_json(
+            api,
+            f"/render?target=sortByTotal(srv.sortBy.*)&from={t0}&until={t1}",
+        )
+        assert [s["target"] for s in got] == [
+            f"srv.sortBy.s{i:02d}" for i in reversed(range(12))
+        ]
+    finally:
+        api.stop()
+
+
+def test_render_area_between_keeps_first_timestamp_order(spark, tmp_path):
+    """areaBetween's two same-named targets come back in the order an
+    orderBy("path", "time") of its frame gives: the series whose
+    points start first goes first, whatever the names."""
+    from carbon_clickhouse_spark.pipeline import (
+        IngestConfig,
+        derive_tables,
+        write_tables,
+    )
+    from carbon_clickhouse_spark.sources.plain import parse_plain_lines
+
+    base = _TWICE_BASE
+    # a.b.late sorts first by name but starts a minute after a.b.zearly
+    lines = [f"a.b.late {j} {base + 60 * (j + 1)}" for j in range(3)] + [
+        f"a.b.zearly {10 + j} {base + 60 * j}" for j in range(3)
+    ]
+    df = spark.createDataFrame([(l,) for l in lines], ["line"])
+    root = str(tmp_path / "tables")
+    write_tables(
+        derive_tables(parse_plain_lines(df, now=base), IngestConfig()), root
+    )
+    store = GraphiteStore.open(spark, root)
+    frame = evaluate_target(
+        parse_target("areaBetween(a.b.*)"), store, base - 1, base + 600
+    )
+    want = []
+    for r in frame.orderBy("path", "time").collect():
+        if r["__series"] not in want:
+            want.append(r["__series"])
+    api = RenderApi(store).start()
+    try:
+        got = _get_json(
+            api,
+            f"/render?target=areaBetween(a.b.*)&from={base - 1}"
+            f"&until={base + 600}",
+        )
+    finally:
+        api.stop()
+    assert want == ["a.b.zearly", "a.b.late"]
+    assert {s["target"] for s in got} == {"areaBetween(a.b.*)"}
+    assert [s["datapoints"][0][0] for s in got] == [10.0, 0.0]
+
+
+def test_requests_run_the_fewest_spark_jobs(spark, twice_root):
+    """Glob and tag resolution collect without a dedup shuffle (one
+    job), the /render finish sorts on the driver (a consolidated
+    literal target runs its shuffle and result jobs only), and
+    highestMax reads the points once."""
+    from carbon_clickhouse_spark.__main__ import serve_api
+
+    t0, t1 = _TWICE_BASE - 1, _TWICE_BASE + 600
+    requests = {
+        "find": ("/metrics/find?query=srv.sortBy.*", 1),
+        "tag_values": ("/tags/autoComplete/values?tag=host", 1),
+        "render_one": (
+            f"/render?target=srv.plain.m&from={t0}&until={t1}"
+            "&maxDataPoints=3",
+            2,
+        ),
+    }
+    api = serve_api(twice_root, spark)
+    try:
+        for kind, (path, most) in requests.items():
+            _get_json(api, path)  # warm
+            before = max(_ungrouped_job_ids(spark), default=-1)
+            _get_json(api, path)
+            jobs = sum(j > before for j in _ungrouped_job_ids(spark))
+            assert 1 <= jobs <= most, (kind, jobs)
+    finally:
+        api.stop()
+
+    store = GraphiteStore.open(spark, twice_root)
+    top = evaluate_target(
+        parse_target("highestMax(srv.sortBy.*, 2)"), store, t0, t1
+    )
+    plan = top._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert sorted({r.path for r in top.collect()}) == [
+        "srv.sortBy.s10", "srv.sortBy.s11",
+    ]
