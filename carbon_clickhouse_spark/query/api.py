@@ -661,9 +661,10 @@ class GraphiteStore:
                 & ~F.col("path").endswith(".")
             )
             .select("path")
+            .distinct()
             .collect()
         )
-        return sorted({r["path"] for r in rows})
+        return sorted(r["path"] for r in rows)
 
     def find(self, glob: str) -> list[tuple[str, bool]]:
         """[(path, is_leaf)] — trailing-dot index rows are branches."""
@@ -695,10 +696,12 @@ class GraphiteStore:
             # job per literal render target.
             paths = [glob]
         elif self._suffix_heavy(glob):
-            from .finder import match_metrics_reverse
+            from .finder import find_metrics_reverse
 
-            rows = match_metrics_reverse(self.index, glob).collect()
-            paths = sorted({r["path"] for r in rows})
+            paths = sorted(
+                r["path"]
+                for r in find_metrics_reverse(self.index, glob).collect()
+            )
         else:
             paths = [p for p, leaf in self.find(glob) if leaf]
         # graphite-web's 'until' is INCLUSIVE; read_series filters
@@ -724,7 +727,9 @@ class GraphiteStore:
         if self.tagged is None:
             raise ValueError("store has no tagged table")
         df = self._tagged_matching(terms)
-        return sorted({r["path"] for r in df.select("path").collect()})
+        return sorted(
+            r["path"] for r in df.select("path").distinct().collect()
+        )
 
     def _tagged_matching(self, terms: list[str]):
         """Tagged rows matching seriesByTag-grammar terms — the
@@ -798,14 +803,14 @@ class GraphiteStore:
                         ),
                     )
                 ).alias("k")
-            )
+            ).distinct()
         else:
             keys = self.tagged.select(
                 F.split_part(F.col("tag1"), F.lit("="), F.lit(1)).alias("k")
-            )
+            ).distinct()
         if prefix:
             keys = keys.filter(F.col("k").startswith(prefix))
-        out = sorted({r["k"] for r in keys.collect()})
+        out = sorted(r["k"] for r in keys.collect())
         return out[:limit] if limit else out
 
     def tag_values(
@@ -842,7 +847,7 @@ class GraphiteStore:
                             lambda x: x.isNotNull(),
                         )
                     ).alias("v")
-                )
+                ).distinct()
             )
         else:
             vals = (
@@ -852,10 +857,11 @@ class GraphiteStore:
                         F.col("tag1"), len(tag) + 2, 10_000
                     ).alias("v")
                 )
+                .distinct()
             )
         if prefix:
             vals = vals.filter(F.col("v").startswith(prefix))
-        out = sorted({r["v"] for r in vals.collect()})
+        out = sorted(r["v"] for r in vals.collect())
         return out[:limit] if limit else out
 
 

@@ -87,17 +87,14 @@ def find_metrics(index: DataFrame, glob: str, tree: bool = True) -> DataFrame:
     return match_metrics(index, glob, tree).distinct()
 
 
-def match_metrics_reverse(
-    index: DataFrame, glob: str, tree: bool = True
-) -> DataFrame:
+def find_metrics_reverse(index: DataFrame, glob: str, tree: bool = True) -> DataFrame:
     """Resolve a suffix-heavy glob (``*.cpu.loadavg``) against the
     REVERSE index rows (levels +10000/+30000): reverse the glob's
     segments, scan the reversed paths — turning a full-scan suffix
     match into a prefix scan, exactly why the reference maintains
     ``graphite_reverse`` (``uploader/points.go:21-31``).
 
-    Returns the matching paths in their ORIGINAL (un-reversed) form,
-    one per matching index row, like :func:`match_metrics`.
+    Returns the matching paths in their ORIGINAL (un-reversed) form.
     """
     from ..functions.paths import path_reverse
     from ..schemas import REVERSE_LEVEL_OFFSET, REVERSE_TREE_LEVEL_OFFSET
@@ -114,12 +111,7 @@ def match_metrics_reverse(
     )
     if prefix:
         df = df.filter(F.col("path").startswith(prefix))
-    return df.select(path_reverse("path").alias("path"))
-
-
-def find_metrics_reverse(index: DataFrame, glob: str, tree: bool = True) -> DataFrame:
-    """:func:`match_metrics_reverse` as distinct ``path`` rows."""
-    return match_metrics_reverse(index, glob, tree).distinct()
+    return df.select(path_reverse("path").alias("path")).distinct()
 
 
 def find_tagged(

