@@ -240,30 +240,17 @@ def launch(
         with open(os.path.join(tier_path, "_precision"), "w") as fh:
             fh.write(str(int(continuous_rollup)))
 
-        from .operators.layout import table_lock
+        from .operators.layout import write_table
 
         def _append_tier(batch, _bid):
             # foreachBatch plain append, NOT a streaming file sink: a
             # file sink's _spark_metadata log would make any batch
             # maintenance rewrite (rebuild_rollup_tier) invisible to
-            # batch readers; the per-table lock keeps appends from
-            # interleaving with that rewrite. Month-partitioned like
-            # the points table, so the incremental tier refresh can
-            # dynamic-overwrite ONLY the months late points touched.
-            from pyspark.sql import functions as F
-
-            with table_lock(tier_path):
-                (
-                    batch.withColumn(
-                        "month",
-                        F.date_format(
-                            F.timestamp_seconds(F.col("time")), "yyyyMM"
-                        ),
-                    )
-                    .write.mode("append")
-                    .partitionBy("month")
-                    .parquet(tier_path)
-                )
+            # batch readers. The table writer's lock keeps appends from
+            # interleaving with that rewrite, its month= layout lets
+            # the incremental refresh rewrite ONLY the months late
+            # points touched, and its guard migrates a legacy flat tier
+            write_table(batch, tier_path)
 
         queries.append(
             _crollup(pts, precision_s=continuous_rollup)

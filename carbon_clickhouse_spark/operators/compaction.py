@@ -11,20 +11,14 @@ At 100 TB: compact per month-partition (the write partitioning), so
 each run touches one partition's files and rewrites them sorted by
 ``(path, time)`` — the same incremental unit ClickHouse merges.
 
-Overwrite strategy (object-store-safe): stage the merged data to a
-scratch location, then rewrite ONLY the touched month partitions with
-Spark's dynamic partition overwrite — the ``replaceWhere`` equivalent
-without Delta. No whole-table directory rename (impossible on S3/GCS)
-and the table root never disappears; the commit granularity is one
-month partition. For a non-partitioned table the final step is a
-plain committed overwrite of the table files — readers can see the
-swap mid-commit there; at scale, prefer month-partitioned layouts (or
-a transactional table format) for anything compacted while being read.
-Since every engine table is written by ``layout.write_table``, only
-the date-less legacy ``tree`` table is flat; index/tagged are flat only
-in roots written by older builds — before round 7, or bulk-loaded by
-``pipeline.ingest_and_store``, which wrote them flat until it moved
-onto ``write_table`` — and the first append migrates those.
+The rewrite is ``layout.rewrite_table``: the merged rows are staged,
+then ONLY the touched month partitions are replaced (dynamic partition
+overwrite, the ``replaceWhere`` equivalent without Delta). The table
+root never disappears and the commit granularity is one month
+partition. A flat table from an older build is rewritten whole, which
+moves its rows into ``month=`` partitions, as its first append would;
+only the date-less legacy ``tree`` table stays flat, and its rewrite is
+a committed whole-table overwrite that readers can see mid-commit.
 """
 
 from __future__ import annotations
@@ -34,9 +28,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import read_table
 from .dedup import replacing_latest
-from .layout import _fs_and_path
+from .layout import _fs_and_path, rewrite_table
 from .rollup import DEFAULT_RULES, rollup
+
+
+def _open(spark: SparkSession, table_path: str) -> DataFrame | None:
+    # the table's declared schema: no inference job per merge cycle
+    return read_table(spark, *os.path.split(table_path.rstrip("/")))
 
 
 def compact_replacing(
@@ -61,10 +61,12 @@ def compact_replacing(
     import json as _json
     import time as _time
 
-    df = spark.read.parquet(table_path)
+    df = _open(spark, table_path)
+    if df is None:
+        return []
     if "month" not in df.columns:
         merged = replacing_latest(df, keys, version_col)
-        _atomic_overwrite(spark, merged, table_path)
+        rewrite_table(merged, table_path, whole=True)
         return []
     explicit = months is not None
     if months is None:
@@ -81,11 +83,8 @@ def compact_replacing(
             )
     if months:
         part = df.filter(F.col("month").isin(list(months)))
-        merged = replacing_latest(part, keys, version_col)
         # partition-scoped overwrite: untouched months never rewrite
-        _atomic_overwrite(
-            spark, merged, table_path, month_partitioned=True
-        )
+        rewrite_table(replacing_latest(part, keys, version_col), table_path)
     if not explicit:
         side = _read_sidecar(table_path, "_replaced_at")
         mtimes = dict((side or {}).get("mtimes") or {})
@@ -129,10 +128,11 @@ def compact_rollup(
     import json as _json
     import time as _time
 
-    df = spark.read.parquet(points_path)
+    df = _open(spark, points_path)
+    if df is None:
+        return []
     if "month" not in df.columns:
-        rolled = _rolled_points(df, rules, now)
-        _atomic_overwrite(spark, rolled, points_path)
+        rewrite_table(_rolled_points(df, rules, now), points_path, whole=True)
         return []
     explicit = months is not None
     if months is None:
@@ -142,7 +142,7 @@ def compact_rollup(
     for month in months:
         part = df.filter(F.col("month") == month)
         out = _rolled_points(part, rules, now).withColumn("month", F.lit(month))
-        _atomic_overwrite(spark, out, points_path, month_partitioned=True)
+        rewrite_table(out, points_path)
     # sidecar: per-month max file mtime AFTER this run's rewrite (so
     # the rewrite's own files don't re-select the month forever), the
     # run timestamp (for age-boundary sweeps), and the rules
@@ -283,99 +283,3 @@ def _rolled_points(df: DataFrame, rules, now: int | None) -> DataFrame:
         F.to_date(F.timestamp_seconds("time")).alias("date"),
         F.lit(0).cast("long").alias("version"),
     )
-
-
-def _hadoop_delete(spark: SparkSession, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API — works on
-    any supported filesystem (local, HDFS, object stores), unlike
-    shutil."""
-    fs, p = _fs_and_path(spark, path)
-    fs.delete(p, True)
-
-
-class _conf_override:
-    """Temporarily set a Spark SQL conf, restoring on exit."""
-
-    def __init__(self, spark: SparkSession, key: str, value: str) -> None:
-        self.spark, self.key, self.value = spark, key, value
-
-    def __enter__(self):
-        try:
-            self.prev = self.spark.conf.get(self.key)
-        except Exception:
-            self.prev = None
-        self.spark.conf.set(self.key, self.value)
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self.key)
-        else:
-            self.spark.conf.set(self.key, self.prev)
-
-
-def _atomic_overwrite(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    month_partitioned: bool = False,
-    derive_month: bool = False,
-    dynamic: bool = True,
-) -> None:
-    """Stage-then-overwrite without directory renames.
-
-    1. write the merged data to a staging dir (Spark forbids
-       overwriting a path that feeds the same job, and we must not
-       drop the live table before the merge is durable)
-    2. month-partitioned tables: dynamic partition overwrite replaces
-       ONLY the staged months — untouched history is never rewritten
-       or deleted (``replaceWhere`` semantics on plain parquet);
-       ``dynamic=False`` keeps the partitioned LAYOUT but replaces the
-       whole table (a full rebuild / layout migration)
-    3. unpartitioned tables: committed whole-table overwrite (files
-       swap at job commit; no rmtree/rename of the root)
-
-    ``derive_month=True`` adds the month column from ``date`` (rollup
-    output drops it); otherwise the existing column partitions.
-    """
-    staging = path.rstrip("/") + "._compacting"
-    sort_cols = [c for c in ("path", "time") if c in df.columns]
-
-    def _sorted(w: DataFrame) -> DataFrame:
-        # month leads when the write is month-partitioned: the file
-        # writer requires ordering by the partition column and would
-        # otherwise add its own (unstable) sort on top of ours
-        cols = (
-            ["month"] + sort_cols
-            if month_partitioned and sort_cols
-            else sort_cols
-        )
-        return w.sortWithinPartitions(*cols) if cols else w
-
-    try:
-        writer = df
-        if month_partitioned:
-            if derive_month:
-                writer = df.withColumn("month", F.date_format("date", "yyyyMM"))
-            (
-                _sorted(writer)
-                .write.mode("overwrite")
-                .partitionBy("month")
-                .parquet(staging)
-            )
-            staged = spark.read.parquet(staging)
-            with _conf_override(
-                spark,
-                "spark.sql.sources.partitionOverwriteMode",
-                "dynamic" if dynamic else "static",
-            ):
-                (
-                    _sorted(staged)
-                    .write.mode("overwrite")
-                    .partitionBy("month")
-                    .parquet(path)
-                )
-        else:
-            _sorted(writer).write.mode("overwrite").parquet(staging)
-            spark.read.parquet(staging).write.mode("overwrite").parquet(path)
-    finally:
-        _hadoop_delete(spark, staging)

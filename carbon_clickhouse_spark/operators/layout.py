@@ -1,25 +1,32 @@
-"""The engine's one table writer, plus layout probing and the one-time
-flat->partitioned migration.
+"""The engine's one table writer: appends, staged rewrites, layout
+probing and the one-time flat->partitioned migration.
 
 The reference's uploaders write into tables declared ``PARTITION BY
 toYYYYMM(Date)`` (README index DDL); the engine mirrors that as
-``month=`` parquet partitions. :func:`write_table` is the only code
-that knows this layout: every date-carrying engine table (points,
-points_reverse, index, tagged and the legacy series tables) is
-appended through it, from the batch writer, the bulk loader, the
-streaming micro-batch and the self-metrics collector alike. A
-date-less frame (the legacy ``tree`` table) is written flat.
+``month=`` parquet partitions. This module is the only code that knows
+the stored layout — the month rule (:func:`month_of`), the ``month=``
+partitioning, the ``(path, time)`` sort, the flat-layout guard and the
+staged overwrite:
 
-Older builds wrote index/tagged as flat parquet — before round 7 every
-writer did, and the bulk loader (``pipeline.ingest_and_store``) kept
-doing so until the writers were folded into :func:`write_table` (the
-batch writer likewise wrote the legacy ``series`` tables flat while
-the stream partitioned them). Spark's parquet reader, pointed at a
-directory that mixes flat data files with ``month=`` partition
-directories, silently returns ONLY the partitioned rows (partition
-discovery wins and the flat files are never listed). An unguarded
-partitioned append onto a legacy table therefore hides all
-pre-upgrade history from every reader with no error.
+* :func:`write_table` appends (or plainly overwrites) one table. Every
+  engine table goes through it: points, points_reverse, index, tagged,
+  the legacy series tables, the continuous-rollup tier and the
+  dropped-line audit, from the batch writer, the bulk loader, the
+  streaming micro-batch and the self-metrics collector alike.
+* :func:`rewrite_table` replaces a table's content with a merged frame
+  — the background-merge rewrites of compaction and the rollup-tier
+  refresh.
+
+A frame that carries none of ``month``/``date``/``time`` (the legacy
+``tree`` table) is written flat.
+
+Roots written by older builds may hold flat tables. Spark's parquet
+reader, pointed at a directory that mixes flat data files with
+``month=`` partition directories, silently returns ONLY the
+partitioned rows (partition discovery wins and the flat files are
+never listed). An unguarded partitioned append onto a legacy table
+therefore hides all pre-upgrade history from every reader with no
+error.
 
 The guard here is the missing probe: before a partitioned append,
 :func:`prepare_partitioned_append` classifies the target's layout and
@@ -32,12 +39,15 @@ The guard here is the missing probe: before a partitioned append,
   happened, or a migration crashed mid-way): the still-hidden flat
   files are folded into partitions the same way, RECOVERING the
   hidden rows;
-* flat with no ``date`` column — cannot be month-partitioned; the
-  caller is told to write flat to match (legacy ``tree``-shaped
+* flat with no month-bearing column — cannot be month-partitioned;
+  the caller is told to write flat to match (legacy ``tree``-shaped
   tables, whose engine-derived frames are equally date-less, so the
   appended files share the stored schema — a date-CARRYING frame
   aimed at a date-less store is a schema mismatch no layout choice
   fixes, and behaves exactly as it did before partitioning existed).
+
+A whole-table rewrite of a flat table (``rewrite_table(..., whole=True)``)
+moves its rows into ``month=`` partitions by the same rule.
 
 Crash-safety: the migration appends the partitioned copies first and
 deletes the flat originals second, so a crash in between leaves a
@@ -48,7 +58,9 @@ the ReplacingMergeTree-tolerated failure mode (duplicate inserts,
 collapsed by ``replacing_latest`` / ``compact_replacing`` at read or
 merge time — uploader retries in the reference duplicate rows the same
 way, ``uploader/upload.go`` retry loop), strictly better than the
-silent loss it replaces.
+silent loss it replaces. A rewrite stages the merged rows first and
+commits them per month partition second, so a crash leaves the
+un-merged (correct, just un-compacted) table.
 
 At 100 TB: the probe is one ``listStatus`` RPC per table per process
 (memoized after the first ``partitioned`` answer), and the migration
@@ -62,11 +74,14 @@ import os
 import threading
 from collections import defaultdict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
     "write_table",
+    "rewrite_table",
+    "month_of",
+    "delete_path",
     "table_lock",
     "table_layout",
     "prepare_partitioned_append",
@@ -105,8 +120,9 @@ _TABLE_WRITE_LOCKS_GUARD = threading.Lock()
 
 def table_lock(path: str) -> threading.Lock:
     """The process-wide write lock of one table directory. Taken by
-    :func:`write_table`; maintenance rewrites (compaction, rollup-tier
-    refreshes) take it too so they never interleave with an append.
+    :func:`write_table`; the maintenance rewrites (compaction,
+    rollup-tier refreshes) hold it around their read and
+    :func:`rewrite_table` so they never interleave with an append.
     A plain ``Lock``: never hold it around a :func:`write_table` call."""
     with _TABLE_WRITE_LOCKS_GUARD:
         return _TABLE_WRITE_LOCKS[_memo_key(path)]
@@ -183,21 +199,57 @@ def _sort_cols(df: DataFrame) -> tuple[str, ...]:
     return ("path", "time") if "time" in df.columns else ("path",)
 
 
-def _write_partitioned(df: DataFrame, path: str, mode: str) -> None:
-    (
-        df.withColumn("month", F.date_format("date", "yyyyMM"))
-        .sortWithinPartitions("month", *_sort_cols(df))
-        .write.mode(mode)
-        .partitionBy("month")
-        .parquet(path)
-    )
+def month_of(df: DataFrame) -> Column | None:
+    """The one month rule of the stored layout: the frame's own
+    ``month`` when it has one (compaction pins each partition's month),
+    else ``yyyyMM`` of ``date``, else ``yyyyMM`` of ``time`` (the
+    date-less rollup tier). None when the frame has none of them: it
+    is written flat (the legacy ``tree`` table)."""
+    if "month" in df.columns:
+        return F.col("month")
+    if "date" in df.columns:
+        return F.date_format("date", "yyyyMM")
+    if "time" in df.columns:
+        return F.date_format(F.timestamp_seconds("time"), "yyyyMM")
+    return None
+
+
+def _write(
+    df: DataFrame,
+    path: str,
+    mode: str,
+    partitioned: bool = True,
+    overwrite: str | None = None,
+) -> None:
+    # partitioned: month= directories by the month rule, rows sorted by
+    # month first (the file writer requires ordering by the partition
+    # column and would otherwise add its own sort on top of ours);
+    # ``overwrite`` is the per-write partitionOverwriteMode, so the
+    # session conf is never touched
+    month = month_of(df) if partitioned else None
+    if month is None:
+        df.sortWithinPartitions(*_sort_cols(df)).write.mode(mode).parquet(path)
+        return
+    if "month" not in df.columns:
+        df = df.withColumn("month", month)
+    writer = df.sortWithinPartitions("month", *_sort_cols(df)).write.mode(mode)
+    if overwrite is not None:
+        writer = writer.option("partitionOverwriteMode", overwrite)
+    writer.partitionBy("month").parquet(path)
+
+
+def delete_path(spark: SparkSession, path: str) -> None:
+    """Recursive delete through the Hadoop FileSystem API — works on
+    any supported filesystem (local, HDFS, object stores)."""
+    fs, jpath = _fs_and_path(spark, path)
+    fs.delete(jpath, True)
 
 
 def migrate_flat_to_partitioned(spark: SparkSession, path: str) -> bool:
     """Fold a table's top-level flat parquet files into ``month=``
-    partitions (month = ``yyyyMM`` of the ``date`` column, the same
-    derivation every writer uses). Returns False — caller must write
-    flat to match — when the flat rows have no ``date`` column.
+    partitions (by :func:`month_of`, the rule every writer uses).
+    Returns False — caller must write flat to match — when the flat
+    rows carry no month-bearing column.
 
     Reads the flat files BY EXPLICIT PATH (``spark.read.parquet(path)``
     on a mixed dir would return only the partitioned rows — the very
@@ -207,9 +259,9 @@ def migrate_flat_to_partitioned(spark: SparkSession, path: str) -> bool:
     if not flat:
         return True
     df = spark.read.parquet(*flat)
-    if "date" not in df.columns:
+    if month_of(df) is None:
         return False
-    _write_partitioned(df, path, "append")
+    _write(df, path, "append")
     fs, _ = _fs_and_path(spark, path)
     jvm = spark._jvm
     for f in flat:
@@ -224,9 +276,9 @@ def prepare_partitioned_append(
 
     Returns ``(ok, pinned)``: ``ok`` is True when the partitioned
     append may proceed (table missing, already partitioned, or just
-    migrated) and False when the existing table is flat WITHOUT a
-    ``date`` column — the caller must then append flat to match the
-    stored layout.
+    migrated) and False when the existing table is flat without a
+    month-bearing column (:func:`month_of`) — the caller must then
+    append flat to match the stored layout.
 
     ``pin`` is the frame the caller is about to write. When a
     migration is actually needed, the frame's lazy plan may itself
@@ -251,7 +303,7 @@ def prepare_partitioned_append(
         # table cannot be month-partitioned, so there is nothing to
         # migrate and no reason to materialize the batch frame
         flat = _flat_data_files(spark, path)
-        if flat and "date" not in spark.read.parquet(*flat).columns:
+        if flat and month_of(spark.read.parquet(*flat)) is None:
             ok = False
         else:
             if pin is not None:
@@ -263,8 +315,9 @@ def prepare_partitioned_append(
 
 
 def write_table(df: DataFrame, path: str, mode: str = "append") -> DataFrame:
-    """Write one engine table: ``month=``-partitioned when the frame
-    carries ``date``, flat otherwise (the legacy ``tree`` table).
+    """Write one engine table: ``month=``-partitioned by
+    :func:`month_of`, flat when the frame has no month-bearing column
+    (the legacy ``tree`` table).
 
     Holds :func:`table_lock` for the write. An append first runs
     :func:`prepare_partitioned_append` with the frame as ``pin``, so a
@@ -276,7 +329,7 @@ def write_table(df: DataFrame, path: str, mode: str = "append") -> DataFrame:
     leaves a ``_SUCCESS``-only directory. Returns the frame as written
     — the pinned copy when a migration ran, whose lineage no longer
     reads the files the migration deleted."""
-    partitioned = "date" in df.columns
+    partitioned = month_of(df) is not None
     with table_lock(path):
         if partitioned and mode == "append":
             partitioned, pinned = prepare_partitioned_append(
@@ -285,13 +338,52 @@ def write_table(df: DataFrame, path: str, mode: str = "append") -> DataFrame:
             if pinned is not None:
                 df = pinned
         try:
-            if partitioned:
-                _write_partitioned(df, path, mode)
-            else:
-                df.sortWithinPartitions(*_sort_cols(df)).write.mode(mode).parquet(
-                    path
-                )
+            _write(df, path, mode, partitioned)
         except Exception:
             forget_layout(path)
             raise
     return df
+
+
+def rewrite_table(df: DataFrame, path: str, whole: bool = False) -> None:
+    """Replace a stored table's rows with ``df``, a merge of what it
+    holds (compaction, the rollup-tier refresh), without a directory
+    rename (impossible on S3/GCS):
+
+    1. write ``df`` to ``<path>._compacting`` — Spark forbids
+       overwriting a path that feeds the same job, and the live table
+       must not be dropped before the merge is durable;
+    2. overwrite ``path`` from the staged copy (read back with the
+       frame's schema: no inference job) through the same partitioned
+       writer. The overwrite replaces only the months the frame holds
+       (dynamic partition overwrite — ``replaceWhere`` semantics on
+       plain parquet: untouched history is never rewritten or
+       deleted), or the whole table when ``whole`` (a full rebuild, or
+       a flat legacy table moving into ``month=`` partitions). A flat
+       frame (no month-bearing column) is a committed whole-table
+       overwrite; readers can see that swap mid-commit;
+    3. delete the staging directory.
+
+    The overwrite mode is a per-write option: the session conf is never
+    touched. Takes no lock: the callers hold :func:`table_lock` around
+    their read and this rewrite."""
+    spark = df.sparkSession
+    month = month_of(df)
+    if month is not None and "month" not in df.columns:
+        df = df.withColumn("month", month)
+    staging = path.rstrip("/") + "._compacting"
+    try:
+        _write(df, staging, "overwrite", overwrite="static")
+        staged = spark.read.schema(df.schema).parquet(staging)
+        _write(
+            staged, path, "overwrite",
+            overwrite="static" if whole else "dynamic",
+        )
+    except Exception:
+        # a finished rewrite keeps the memoized layout true (a dated
+        # flat table, the only one that changes layout, is never
+        # memoized flat); a failed one may leave any layout
+        forget_layout(path)
+        raise
+    finally:
+        delete_path(spark, staging)

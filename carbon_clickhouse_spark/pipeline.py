@@ -16,11 +16,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators.compaction import _hadoop_delete
 from .operators.dedup import new_series_only
 from .operators.filters import drop_rule_predicate, ignored_patterns_predicate
 from .operators.index import build_index
-from .operators.layout import table_layout, write_table
+from .operators.layout import delete_path, table_layout, write_table
 from .operators.tagged import build_tagged
 from .functions.paths import path_reverse
 from .schemas import REPLACING_KEYS, read_table
@@ -115,15 +114,15 @@ def write_tables(
             continue
         path = os.path.join(root, name)
         # a PARTITIONED write of an EMPTY frame leaves a directory
-        # holding only _SUCCESS, which an inferring reader (compaction)
-        # cannot open — an empty table simply does not materialize
+        # holding only _SUCCESS, which an inferring reader
+        # (spark.read.parquet without a schema) cannot open — an empty table simply does not materialize
         # (readers treat a missing table dir as empty). With
         # mode='overwrite' that must still TRUNCATE an existing table
         # (a kept previous state would turn the truncation into a lie)
         if not df.head(1):
             spark = df.sparkSession
             if mode == "overwrite" and table_layout(spark, path) != "missing":
-                _hadoop_delete(spark, path)
+                delete_path(spark, path)
             continue
         write_table(df, path, mode)
 
@@ -225,7 +224,7 @@ def ingest_and_store(
         # a _SUCCESS-only directory an inferring reader cannot open.
         # A listing, not an emptiness job
         if table_layout(spark, path) == "missing":
-            _hadoop_delete(spark, path)
+            delete_path(spark, path)
 
     # the three derived tables scan the same stored points independently
     # — submit them as concurrent jobs (Spark's scheduler interleaves

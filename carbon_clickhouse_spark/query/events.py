@@ -19,14 +19,12 @@ live facade can accept POSTs while /render reads.
 from __future__ import annotations
 
 import os
-import threading
 import time as _time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.layout import table_lock
 from ..schemas import CONTRACT, read_table
-
-_LOCK = threading.Lock()
 
 
 class EventsStore:
@@ -54,7 +52,7 @@ class EventsStore:
             [(row["when"], row["what"], row["tags"], row["data"])],
             CONTRACT["events"],
         )
-        with _LOCK:
+        with table_lock(self.path):
             df.coalesce(1).write.mode("append").parquet(self.path)
         return row
 

@@ -102,12 +102,14 @@ def read_table(spark: SparkSession, root: str, name: str) -> DataFrame | None:
     Hadoop ``FileSystem.exists`` probe (any filesystem, no analysis
     exception on a miss), then a read with the :data:`CONTRACT` schema,
     which runs no job and reads a ``_SUCCESS``-only dir as 0 rows.
-    Each call lists the files anew, so it sees rows appended since."""
+    Each call lists the files anew, so it sees rows appended since.
+    A name without a declared schema (``tree``, or a table the
+    compaction jobs are pointed at by path) opens by inference."""
     path = os.path.join(root, name)
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return None
-    schema = CONTRACT[name]
+    schema = CONTRACT.get(name)
     if schema is None:
         return spark.read.parquet(path)
     return spark.read.schema(schema).parquet(path)

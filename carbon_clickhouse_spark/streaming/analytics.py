@@ -168,11 +168,12 @@ def rebuild_rollup_tier(
     bounded by one chunk's month spread, and re-rebuilding a month is
     idempotent). All other months' tier rows are carried over
     verbatim; the points scan is partition-pruned to the selected
-    months. The tier itself is month-partitioned (the launcher's
-    appender writes it that way): an incremental refresh
-    dynamic-overwrites ONLY the touched months' partitions, leaving
-    untouched months byte-identical on disk; a legacy unpartitioned
-    tier migrates to the partitioned layout on its next full rewrite.
+    months. The tier itself is month-partitioned (the launcher appends
+    it through ``layout.write_table``): an incremental refresh
+    rewrites ONLY the touched months' partitions
+    (``layout.rewrite_table``), leaving untouched months
+    byte-identical on disk; a legacy unpartitioned tier moves into
+    the partitioned layout on its next append or full rewrite.
     A bucket never straddles a month boundary when
     ``precision_s`` divides 86400 (UTC months start on day
     boundaries); otherwise — or on the first refresh, or when the
@@ -196,9 +197,8 @@ def rebuild_rollup_tier(
     """
     import os
 
-    from ..operators.compaction import _atomic_overwrite
     from ..schemas import read_table
-    from ..operators.layout import table_lock
+    from ..operators.layout import month_of, rewrite_table, table_lock
 
     if precision_s is None:
         precision_s = tier_precision(root) or 60
@@ -246,7 +246,6 @@ def rebuild_rollup_tier(
         up_to = (int(row["m"]) // precision_s) * precision_s + precision_s
     rebuilt = _tier_rebuild_frame(pts, precision_s, up_to, months).persist()
     tier_cols = rebuilt.columns
-    month_of = F.date_format(F.timestamp_seconds(F.col("time")), "yyyyMM")
     try:
         n = rebuilt.count()  # materialize once; the write reuses it
         with table_lock(tier_path):
@@ -262,12 +261,7 @@ def rebuild_rollup_tier(
                 carry = t.filter(
                     (F.col("time") >= up_to) & F.col("month").isin(months)
                 ).select(*tier_cols)
-                out = rebuilt.unionByName(carry).withColumn(
-                    "month", month_of
-                )
-                _atomic_overwrite(
-                    spark, out, tier_path, month_partitioned=True
-                )
+                rewrite_table(rebuilt.unionByName(carry), tier_path)
             else:
                 # full rebuild (or a legacy unpartitioned tier being
                 # migrated): carried over verbatim as rows — buckets
@@ -276,24 +270,17 @@ def rebuild_rollup_tier(
                 # rewritten in the month-partitioned layout
                 out = rebuilt
                 if t is not None:
+                    old = t.select(*tier_cols)
                     keep = F.col("time") >= up_to
                     if months is not None:
-                        # string-typed list: date_format yields
+                        # string-typed list: the month rule yields
                         # strings even when the partition column read
                         # back as int
-                        keep = keep | ~month_of.isin(
+                        keep = keep | ~month_of(old).isin(
                             [str(m) for m in months]
                         )
-                    out = rebuilt.unionByName(
-                        t.filter(keep).select(*tier_cols)
-                    )
-                _atomic_overwrite(
-                    spark,
-                    out.withColumn("month", month_of),
-                    tier_path,
-                    month_partitioned=True,
-                    dynamic=False,
-                )
+                    out = rebuilt.unionByName(old.filter(keep))
+                rewrite_table(out, tier_path, whole=True)
             # the overwrite clears the directory: restore the
             # precision sidecar (and advance the version watermark)
             # for the next maintenance cycle

@@ -34,7 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import IngestConfig, derive_tables
 from ..operators.dedup import new_series_only
-from ..operators.layout import table_lock, write_table
+from ..operators.layout import write_table
 from ..operators.filters import drop_rule_predicate
 from ..schemas import REPLACING_KEYS, read_table
 from ..sources.plain import parse_plain_lines
@@ -172,9 +172,7 @@ def start_ingest(
                 dropped = points.filter(~keep).withColumn(
                     "protocol", F.lit(config.protocol)
                 )
-                dropped_path = os.path.join(config.root, "dropped")
-                with table_lock(dropped_path):
-                    dropped.write.mode("append").parquet(dropped_path)
+                write_table(dropped, os.path.join(config.root, "dropped"))
             kept_rows: int | None = None
             if config.collector is not None:
                 # per-reason drop counters (S7): one aggregation over

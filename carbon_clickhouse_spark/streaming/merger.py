@@ -45,7 +45,7 @@ time — if the previous cycle is still going when the counter fires,
 the firing is skipped (its months stay pending), matching CH's
 bounded merge pool rather than stacking threads.
 
-Crash safety is ``compaction._atomic_overwrite``'s: merges stage to
+Crash safety is ``operators.layout.rewrite_table``'s: merges stage to
 scratch then commit per month partition; a crash mid-merge leaves the
 un-merged (correct, just un-compacted) data.
 

@@ -370,3 +370,61 @@ def test_compact_rollup_explicit_months_skip_sidecar(spark, tmp_path):
     assert "202106" in compact_rollup(spark, path, rules=rules, now=t2)
     # and only then goes quiet
     assert months_needing_rollup(spark, path, rules, now=t2) == []
+
+
+def test_rewrites_leave_the_session_conf_alone(spark, tmp_path, monkeypatch):
+    """Compaction and the rollup-tier refresh pick their partition
+    overwrite mode per write: none of them sets or unsets a session
+    conf (the background merger runs them on the stream's own session)."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from carbon_clickhouse_spark.streaming.analytics import rebuild_rollup_tier
+
+    root = str(tmp_path)
+    jun, jul = 1_622_505_600, 1_625_097_600
+
+    def _points(rows, mode):
+        (
+            spark.createDataFrame(
+                rows, "path string, value double, time long, version long"
+            )
+            .withColumn("date", F.to_date(F.timestamp_seconds("time")))
+            .withColumn("month", F.date_format("date", "yyyyMM"))
+            .write.mode(mode)
+            .partitionBy("month")
+            .parquet(f"{root}/points")
+        )
+
+    _points([("c.a", 1.0, jun + 30, 1), ("c.a", 2.0, jul + 30, 1)], "overwrite")
+    spark.createDataFrame(
+        [(dt.date(2021, 6, 5), 1, "c.a", 1), (dt.date(2021, 6, 5), 1, "c.a", 2)],
+        "date date, level int, path string, version long",
+    ).withColumn("month", F.date_format("date", "yyyyMM")).write.partitionBy(
+        "month"
+    ).parquet(f"{root}/index")
+
+    calls = []
+    for name in ("set", "unset"):
+        real = getattr(RuntimeConfig, name)
+
+        def spy(self, *args, _real=real, _name=name):
+            calls.append((_name, args))
+            return _real(self, *args)
+
+        monkeypatch.setattr(RuntimeConfig, name, spy)
+
+    horizon = jul + 3600
+    assert rebuild_rollup_tier(spark, root, precision_s=60, up_to=horizon) == 2
+    _points([("c.a", 9.0, jun + 31, 2)], "append")
+    # incremental: the late June month plus the boundary-version month
+    assert rebuild_rollup_tier(spark, root, up_to=horizon) == 2
+    compact_replacing(
+        spark, f"{root}/index", ["date", "level", "path"], months=["202106"]
+    )
+    compact_rollup(
+        spark, f"{root}/points",
+        (RollupRule("", "avg", (Retention(0, 60),)),),
+        now=horizon, months=["202106"],
+    )
+    assert calls == []
+    assert [r.version for r in spark.read.parquet(f"{root}/index").collect()] == [2]

@@ -590,3 +590,63 @@ enabled = true
     # precision sidecar recorded for maintenance cycles
     from carbon_clickhouse_spark.streaming.analytics import tier_precision
     assert tier_precision(root) == 60
+
+
+def test_continuous_rollup_keeps_a_legacy_flat_tier(spark, tmp_path):
+    """The tier appender is the engine's table writer: onto a flat
+    rollup_hot left by an older build it migrates the flat buckets into
+    month= partitions first, so they stay readable next to the new ones
+    (a bare partitioned append would hide every flat bucket)."""
+    from carbon_clickhouse_spark.schemas import CONTRACT, read_table
+    from carbon_clickhouse_spark.streaming.receivers import send_lines
+
+    conf = tmp_path / "carbon-clickhouse.conf"
+    conf.write_text(
+        """
+[data]
+path = "%s"
+chunk-interval = "500ms"
+
+[tcp]
+listen = "127.0.0.1:0"
+enabled = true
+"""
+        % str(tmp_path / "data")
+    )
+    base = 1625400000
+    root = str(tmp_path / "data" / "tables")
+    spark.createDataFrame(
+        [("old.a", base - 3600, 1.0, 1.0, 1.0, 1.0, 1, 1.0)],
+        CONTRACT["rollup_hot"],
+    ).write.parquet(f"{root}/rollup_hot")
+    cfg = load_config(str(conf))
+    receivers, queries = launch(cfg, spark, continuous_rollup=60)
+    try:
+        send_lines(
+            "127.0.0.1", receivers[0].port,
+            [f"new.a {v} {base + t}" for v, t in ((10, 0), (30, 30))]
+            # watermark pusher so the first bucket finalizes
+            + [f"new.a 5 {base + 3600}"],
+        )
+        deadline = time.time() + 90
+        while time.time() < deadline:
+            try:
+                tier = read_table(spark, root, "rollup_hot")
+                if tier.filter(F.col("path") == "new.a").count():
+                    break
+            except Exception:
+                pass
+            time.sleep(0.5)
+        for q in queries:
+            assert q.exception() is None
+    finally:
+        for rx in receivers:
+            rx.stop()
+        for q in queries:
+            q.stop()
+    rows = {
+        (r["path"], r["time"]): r
+        for r in read_table(spark, root, "rollup_hot").collect()
+    }
+    assert rows[("old.a", base - 3600)]["avg"] == 1.0
+    assert rows[("new.a", base)]["avg"] == 20.0
